@@ -3,15 +3,19 @@
 Exact mode compares all pairs (broadcast-nested-loop on ``id_a < id_b``)
 with norms computed once per row - correct at correctness-harness scale
 and the oracle-checkable ground truth. The scale path is
-``embedding_neardup_lsh``: banded random-hyperplane signatures, an equi
-join on the (band, bucket) key for candidates, then the SAME exact
-cosine verification - the minhash_lsh_pairs shape applied to dense
-vectors, linear in data + candidates instead of O(N^2).
+``embedding_neardup_lsh``: banded sign-LSH signatures over md5-derived
+integer hyperplanes, an equi join on the (band, bucket) key for
+candidates, then the SAME exact cosine verification - the
+minhash_lsh_pairs shape applied to dense vectors, linear in data +
+candidates instead of O(N^2). The signatures are exact integer
+arithmetic, so DuckDB recomputes every band key and the whole pipeline
+is hash-checked.
 """
 
 from __future__ import annotations
 
 import hashlib
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -23,32 +27,73 @@ from pyspark.storagelevel import StorageLevel
 from ..functions.vectors import dot, l2_norm
 from ..operators.relational import ensure_parallelism
 
-DEFAULT_SEED = 42
+#: Vectors are quantized as floor(x * 2^20): a power-of-two scale is
+#: exact in every engine, and floor rounds the same way everywhere.
+QUANT_SCALE = 1 << 20
 
 
-def md5_plane_component(tag: str) -> float:
-    """Deterministic pseudo-random double in [-1, 1) derived from md5 -
-    the ONLY hash Spark, DuckDB, and hashlib compute identically. The
-    top 15 hex chars (60 bits) convert exactly to int64; dividing by
-    2^59 is an exact power-of-two scale, so Python, a DuckDB
-    ``('0x'||substring(md5(s),1,15))::BIGINT / 2^59 - 1.0``, and the
-    literal shipped to Spark are the SAME IEEE double bit pattern
-    (pinned in tests). Sign-LSH only reads the sign of <v, p>, so the
-    uniform-cube (rather than Gaussian) direction distribution costs a
-    little angular uniformity but nothing an oracle can see; recall is
-    still held by embedding_recall_contract's measured floor."""
-    return int(hashlib.md5(tag.encode()).hexdigest()[:15], 16) / (1 << 59) - 1.0
+def md5_plane_component(tag: str) -> int:
+    """Integer hyperplane component for ``tag`` (``plane:{band}:{bit}:{i}``):
+    the sum of four 20-bit md5 uniforms ``md5(f"{tag}:{j}")[:5 hex]``,
+    j = 0..3, minus their mean 4 * 2^19. The Irwin-Hall sum is close to
+    Gaussian (so the planes are near-uniform directions) and lies in
+    [-2^21, 2^21). md5 is the only hash Spark, DuckDB and hashlib compute
+    identically, so the DuckDB oracle regenerates the same integers."""
+    return sum(
+        int(hashlib.md5(f"{tag}:{j}".encode()).hexdigest()[:5], 16) for j in range(4)
+    ) - (4 << 19)
 
 
-def md5_planes(num_bands: int, bits_per_band: int, dim: int) -> list[tuple[int, int, list[float]]]:
-    """(band, weight=2^bit, plane) rows for the SQL-reproducible
-    signature path; the DuckDB twin regenerates the identical rows from
-    the same ``plane:{band}:{bit}:{i}`` tags."""
-    return [
-        (band, 1 << bit, [md5_plane_component(f"plane:{band}:{bit}:{i}") for i in range(dim)])
-        for band in range(num_bands)
-        for bit in range(bits_per_band)
-    ]
+@lru_cache(maxsize=None)
+def md5_planes(num_bands: int, bits_per_band: int, dim: int) -> np.ndarray:
+    """(num_bands * bits_per_band, dim) float64 array of integer plane
+    components, row ``band * bits_per_band + bit``. Built on first use
+    (~0.2 s for 32 x 8 x 64) and cached per shape; read-only."""
+    planes = np.array(
+        [
+            [md5_plane_component(f"plane:{band}:{bit}:{i}") for i in range(dim)]
+            for band in range(num_bands)
+            for bit in range(bits_per_band)
+        ],
+        dtype=np.float64,
+    )
+    planes.flags.writeable = False
+    return planes
+
+
+def band_keys(vectors: DataFrame, num_bands: int, bits_per_band: int, dim: int) -> DataFrame:
+    """(id, bk) rows - one per vector and band - of the ``(id, v)``
+    vectors, ``bk = band * 2^bits + bucket``; bucket bit ``bit`` is set
+    iff the integer dot ``floor(v * 2^20) . plane`` is positive. ONE
+    numpy matmul per Arrow batch (a pandas_udf: 256+ dot products per
+    row is matrix work, where interpreted Catalyst HOFs would evaluate
+    16k lambda steps per row).
+
+    Exactness: every quantized component is an integer with
+    ``|q| <= |v| * 2^20 + 1`` and every plane component an integer of
+    magnitude at most 2^21, so each product and every partial sum of a
+    dot is an integer of magnitude at most ``(max|v| + 2^-20) * dim *
+    2^41``. The dots are therefore EXACT while ``max|v| * dim < 4096``
+    (less a 2^-20 * dim rounding margin): everything stays below 2^53,
+    so the float64 BLAS matmul is exact in ANY summation order and the
+    keys equal DuckDB's integer ``SUM(q * c) > 0``. Unit vectors of dim
+    64 sit far inside the bound."""
+    planes = md5_planes(num_bands, bits_per_band, dim)
+    weights = np.int64(1) << np.arange(bits_per_band, dtype=np.int64)
+    offsets = np.arange(num_bands, dtype=np.int64) << bits_per_band
+
+    # The closure references no function of this package, so Python
+    # workers unpickle it without importing the package.
+    @pandas_udf("array<long>")
+    def keys(v: pd.Series) -> pd.Series:
+        q = np.floor(np.vstack(v.to_numpy()) * QUANT_SCALE)  # (batch, dim)
+        bits = (q @ planes.T) > 0  # (batch, B*b)
+        buckets = bits.reshape(len(q), num_bands, bits_per_band) @ weights  # (batch, B)
+        return pd.Series(list(buckets + offsets))
+
+    return vectors.select(
+        "id", F.explode(keys(F.col("v").cast("array<double>"))).alias("bk")
+    )
 
 
 def embedding_neardup_pairs(
@@ -84,10 +129,8 @@ def embedding_neardup_lsh(
     num_bands: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
     dim: int = 64,
     max_bucket: int | None = None,
-    signatures: str = "matmul",
 ) -> DataFrame:
     """Banded sign-LSH near-dup pairs: same output contract as
     ``embedding_neardup_pairs`` (vec_a < vec_b, exact cosine >=
@@ -96,11 +139,13 @@ def embedding_neardup_lsh(
 
     Shape (the minhash_lsh_pairs pipeline for dense vectors):
 
-    1. signatures - ``num_bands * bits_per_band`` fixed seeded
-       hyperplanes; per band the packed sign bits form a bucket id.
-       Computed as ONE numpy matmul per Arrow batch (a pandas_udf: 256+
-       dot products per row is matrix work, where interpreted Catalyst
-       HOFs would evaluate 16k lambda steps per row).
+    1. signatures - ``num_bands * bits_per_band`` md5-derived integer
+       hyperplanes (``md5_planes``); per band the packed sign bits form a
+       bucket id (``band_keys``). The integer dots are exact in float64
+       while ``max|x| * dim < 4096`` (see ``band_keys``), so DuckDB
+       recomputes the identical keys and the WHOLE pipeline - signatures,
+       banding, candidate join, exact-cosine verification - is
+       hash-checked end to end.
     2. explode to (id, band_key), self-join on the key with id_a < id_b,
        distinct - linear in data + bucket collisions.
     3. verify candidates with the exact JVM-side cosine, so output pairs
@@ -113,7 +158,8 @@ def embedding_neardup_lsh(
     ~0.6% of random pairs. The defaults here (8, 32) are tuned for this
     corpus's much looser 0.5 tail - uniform-on-the-sphere vectors with
     NO planted duplicates, the worst case for any geometric blocking -
-    giving ~0.85 recall at ~7x candidate reduction
+    at ~7x candidate reduction; measured recall against the exact pairs
+    is 9/14 at sf0.01 (threshold 0.45) and 8/14 at sf0.1 (threshold 0.5)
     (tests/test_dedup_similarity.py pins both regimes).
 
     SCALE GUARDS (measured, round 6 - the 40x-volume bench): a band has
@@ -137,98 +183,12 @@ def embedding_neardup_lsh(
       BEFORE geometric blocking, same composition rule as the minhash
       pipeline's dedup-before-LSH. None (default) preserves exhaustive
       banding for the contract/recall paths at check scales.
-
-    ``signatures`` picks the band-key computation (round-12 graduation,
-    the simhash ``keying`` pattern):
-
-    * ``"matmul"`` (default) - seeded Gaussian hyperplanes, ONE numpy
-      matmul per Arrow batch. The throughput path; numpy's pairwise
-      summation order is not SQL-reproducible, so this form carries a
-      rows-only driver check (quality held by embedding_recall_contract).
-    * ``"sql"`` - md5-derived hyperplanes (``md5_planes``) evaluated as
-      a broadcast B-row band table (each band row nests its b
-      (weight, plane) structs) cross-joined to the vectors; per
-      (vector, band) row the bucket is one ``aggregate`` fold over the
-      structs, each dot an explicit-0.0-init sequential ``aggregate``
-      fold, bucket bits recombined by exact integer (order-free)
-      addition. Every intermediate is bit-reproducible in DuckDB
-      (``list_reduce`` with the same fold order + the same md5 planes),
-      so the WHOLE pipeline - signatures, banding, candidate join,
-      exact-cosine verification - is hash-checked end to end. Work is
-      identical asymptotically (N*B*b dots); the constant is
-      interpreted-HOF vs BLAS, which is why the matmul form remains the
-      deployment default.
     """
     emb = ensure_parallelism(emb)
     sides = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), l2_norm(vec_col).alias("nrm")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_bands, n_bits = num_bands, bits_per_band
-    if signatures == "sql":
-        # ONE-row broadcast plane table (optimization round 13, guide
-        # sections 2.3/2.4; round 12 had already folded the original
-        # (B*b)-row crossJoin down to B rows): ALL bands nest into a
-        # single row - array<struct<band, planes>> - so the join
-        # inflation disappears entirely (the build side is 1 row) and
-        # each vector computes its B band keys in one ``transform``
-        # producing ``array<long>`` + ``explode``, exactly the shape of
-        # the matmul path. The arithmetic is UNCHANGED expression for
-        # expression: per band the bucket is the same sequential
-        # ``aggregate`` fold over the same b (w, plane) structs (each
-        # dot the same explicit-0.0-init fold as functions.vectors.dot),
-        # and the band offset is the same exact integer addition - so
-        # every bk is bit-identical to the round-12 form's and the
-        # DuckDB twin is untouched (collect-compared + parity-proven).
-        # Plane values stay DATA, not expression tree: a fully-literal
-        # per-row projection was measured (round 12) at ~27s of py4j
-        # Column construction per build.
-        spark = emb.sparkSession
-        plane_rows = md5_planes(num_bands, bits_per_band, dim)
-        band_rows = [
-            (band, [(w, plane) for b2, w, plane in plane_rows if b2 == band])
-            for band in range(num_bands)
-        ]
-        planes_df = spark.createDataFrame(
-            [(band_rows,)],
-            "bands array<struct<band: int, "
-            "planes: array<struct<w: long, plane: array<double>>>>>",
-        )
-        keys = F.transform(
-            F.col("bands"),
-            lambda bs: F.aggregate(
-                bs["planes"],
-                F.lit(0).cast("long"),
-                lambda acc, s: acc
-                + F.when(dot("v", s["plane"]) > 0, s["w"]).otherwise(
-                    F.lit(0).cast("long")
-                ),
-            )
-            + (bs["band"].cast("long") * F.lit(1 << n_bits)),
-        )
-        buckets = (
-            sides.select("id", "v")
-            .crossJoin(F.broadcast(planes_df))
-            .select("id", F.explode(keys).alias("bk"))
-        )
-    elif signatures == "matmul":
-        rng = np.random.RandomState(seed)
-        planes = rng.standard_normal((num_bands * bits_per_band, dim))
-        planes /= np.linalg.norm(planes, axis=1, keepdims=True)
-        weights = (1 << np.arange(bits_per_band)).astype(np.int64)
-
-        @pandas_udf("array<long>")
-        def band_keys(v: pd.Series) -> pd.Series:
-            x = np.vstack(v.to_numpy())  # (batch, dim)
-            bits = (x @ planes.T) > 0  # (batch, B*b)
-            buckets = bits.reshape(len(x), n_bands, n_bits) @ weights  # (batch, B)
-            keys = buckets + (np.arange(n_bands, dtype=np.int64) << n_bits)
-            return pd.Series(list(keys))
-
-        buckets = sides.select(
-            "id", F.explode(band_keys(F.col("v").cast("array<double>"))).alias("bk")
-        )
-    else:
-        raise ValueError(f"unknown signatures mode {signatures!r}")
+    buckets = band_keys(sides, num_bands, bits_per_band, dim)
     if max_bucket is not None:
         # One bk-keyed window pass - the same shuffle key the self-join
         # needs anyway, and no broadcast whose size would track the
@@ -243,7 +203,7 @@ def embedding_neardup_lsh(
         )
     # Persist the EXPLODED (and, when capped, already cap-filtered)
     # bucket keys: both join aliases consume this subtree, and without
-    # the persist the signature pass runs twice (matmul A/B at sf0.1:
+    # the persist the signature pass runs twice (A/B at sf0.1:
     # 2.3s -> 1.6s). Persisting AFTER the max_bucket window
     # (optimization round 12) means the cap's exchange + window run
     # once instead of once per join side (plan: two Window+Exchange

@@ -128,7 +128,7 @@ def minhash_lsh_pairs(
     if quotient is None:
         from .ngram import resolve_quotient
 
-        quotient = resolve_quotient(docs, n, text_col, id_col, small_default=False)
+        quotient = resolve_quotient(docs, n, text_col, id_col)
     members = None
     if quotient:
         from .ngram import exact_class_collapse

@@ -19,8 +19,6 @@ regime.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -29,23 +27,19 @@ from ..functions.text import tokens
 from ..operators.relational import ensure_parallelism
 
 #: Auto-quotient gates (optimization round 13, guide section 8). Inputs
-#: whose optimizer size estimate is below MIN_BYTES keep the caller's
-#: small-scale default with ZERO extra work (the check/bench fixtures);
-#: above it, one cheap sampled aggregate measures the mean exact-class
-#: multiplicity and the quotient engages when duplicate mass is heavy
-#: enough to pay for the collapse (measured: multiplicity ~4.4 at 40x
-#: volume is a wash, ~44 at 400x is 3.3x - the threshold sits between).
+#: whose optimizer size estimate is below MIN_BYTES keep the direct path
+#: with ZERO extra work (the check/bench fixtures); above it, one cheap
+#: sampled aggregate measures the mean exact-class multiplicity and the
+#: quotient engages when duplicate mass is heavy enough to pay for the
+#: collapse (measured: multiplicity ~4.4 at 40x volume is a wash, ~44
+#: at 400x is 3.3x - the threshold sits between).
 #: The byte gate is calibrated against the OPTIMIZER's estimate of the
 #: compressed input (the check/bench documents fixture is ~0.6 MB, the
 #: 10x one 5.3 MB, the 40x one 12 MB, the 400x one 99 MB): 8 MB keeps
 #: every bench/check plan untouched and starts paying the one sampling
 #: job from ~40x volume up, where it is noise against the pipeline.
-QUOTIENT_AUTO_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QUOTIENT_MIN_BYTES", str(8 << 20))
-)
-QUOTIENT_MIN_MULTIPLICITY = float(
-    os.environ.get("SPARK_GRAFT_QUOTIENT_MIN_MULT", "8")
-)
+QUOTIENT_AUTO_MIN_BYTES = 8 << 20
+QUOTIENT_MIN_MULTIPLICITY = 8.0
 _QUOTIENT_SAMPLE_MOD = 16
 
 
@@ -104,20 +98,13 @@ def estimate_class_multiplicity(
     return float(row["n"]) / float(row["d"])
 
 
-def resolve_quotient(
-    docs: DataFrame,
-    n: int,
-    text_col: str,
-    id_col: str,
-    small_default: bool,
-) -> bool:
+def resolve_quotient(docs: DataFrame, n: int, text_col: str, id_col: str) -> bool:
     """Data-derived direct-vs-quotient switch (optimization round 13,
-    the round-12 verdict's item 3): below the size gate the caller's
-    measured small-scale default applies with no extra job; above it
-    the sampled multiplicity decides. Parameterized by env
-    (SPARK_GRAFT_QUOTIENT_MIN_BYTES / _MIN_MULT) for deployments."""
+    the round-12 verdict's item 3): below the size gate the direct path
+    (the measured-faster choice at thin duplicate mass) applies with no
+    extra job; above it the sampled multiplicity decides."""
     if _plan_size_bytes(docs) < QUOTIENT_AUTO_MIN_BYTES:
-        return small_default
+        return False
     return (
         estimate_class_multiplicity(docs, n, text_col, id_col)
         >= QUOTIENT_MIN_MULTIPLICITY
@@ -355,9 +342,7 @@ def ngram_jaccard_pairs(
     shape should pass the bool explicitly.
     """
     if quotient is None:
-        quotient = True if n == 1 else resolve_quotient(
-            docs, n, text_col, id_col, small_default=False
-        )
+        quotient = True if n == 1 else resolve_quotient(docs, n, text_col, id_col)
     if not quotient:
         base = (
             ensure_parallelism(docs)

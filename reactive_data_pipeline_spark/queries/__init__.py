@@ -117,12 +117,13 @@ from . import llm4  # noqa: E402,F401
 #: Catalog queries whose underlying machinery was rewritten THIS round
 #: - the staleness-clock window (tests/test_catalog_order.py::
 #: derive_check_window) pins them for an immediate driver re-check.
-#: Round 13 (optimization round 2): (a) embedding_neardup_lsh's SQL
-#: signature stage folds all 32 bands in ONE pass (1-row broadcast
-#: plane table, transform -> array<long> -> explode) and its candidate
-#: dedup is a user repartition AQE cannot under-parallelize
-#: (dedup/embedding.py); (b) the knn contracts run BOTH legs off one
-#: checkpointed scored scan (similarity/lsh.py::knn_lsh_and_brute,
+#: Round 13 (optimization round 2): (a) embedding_neardup_lsh and
+#: embedding_recall_contract share ONE signature path - md5-derived
+#: integer hyperplanes, one exact numpy matmul per Arrow batch that the
+#: DuckDB oracle recomputes bit for bit - and the candidate dedup is a
+#: user repartition AQE cannot under-parallelize (dedup/embedding.py);
+#: (b) the knn contracts run BOTH legs off one checkpointed scored scan
+#: (similarity/lsh.py::knn_lsh_and_brute,
 #: similarity/ivf.py::knn_ivf_and_brute); (c) exact_class_collapse is
 #: the groupBy+min_by shape with NULL-set singleton routing, the
 #: direct-vs-quotient switch is data-derived (resolve_quotient), and

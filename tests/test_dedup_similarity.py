@@ -211,15 +211,20 @@ def test_embedding_lsh_bucket_cap_identity_and_bound(spark):
     import numpy as np
 
     from reactive_data_pipeline_spark.dedup import embedding_neardup_lsh
+    from reactive_data_pipeline_spark.dedup.embedding import band_keys
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     un = sorted(map(tuple, embedding_neardup_lsh(emb, threshold=0.5).collect()))
     ca = sorted(map(tuple, embedding_neardup_lsh(emb, threshold=0.5, max_bucket=64).collect()))
     assert un == ca and len(ca) >= 1
 
-    # 300 near-identical vectors saturate their buckets in every band;
-    # with the cap at 64 every one of those groups exceeds the cap, so
-    # the quadratic 300-clique (44,850 pairs) must NOT be emitted.
+    # 300 near-identical vectors saturate their buckets in every band,
+    # so the quadratic 300-clique (44,850 pairs) must NOT be emitted.
+    # One md5 plane is almost orthogonal to the hot direction (|cos|
+    # ~1.5e-4), so the jitter flips that bit for some vectors and splits
+    # one band's group in two; a split-off group at or under the cap is
+    # kept, so the capped output is exactly the pairs that share some
+    # bucket of at most 64 members.
     rng = np.random.RandomState(11)
     v = rng.standard_normal(64)
     rows = [(i, [float(x) for x in v + rng.normal(scale=1e-3, size=64)]) for i in range(300)]
@@ -227,66 +232,54 @@ def test_embedding_lsh_bucket_cap_identity_and_bound(spark):
     capped = embedding_neardup_lsh(hot, threshold=0.9, max_bucket=64).count()
     uncapped = embedding_neardup_lsh(hot, threshold=0.9).count()
     assert uncapped == 300 * 299 // 2
-    assert capped == 0
+    members: dict[int, list[int]] = {}
+    hot_vectors = hot.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    for r in band_keys(hot_vectors, 32, 8, 64).collect():
+        members.setdefault(r.bk, []).append(r.id)
+    small = {(a, b) for m in members.values() if len(m) <= 64
+             for a in m for b in m if a < b}
+    assert capped == len(small) < uncapped // 50
 
 
-def test_md5_plane_component_third_implementation():
-    """The sql-signature planes are md5-derived (the cross-engine hash
-    rule): pin the formula against an independent hand computation AND
-    two frozen constants, so neither the tag format nor the 2^59 scale
-    can drift without this test seeing it (the DuckDB oracle regenerates
-    the same planes from the same tags)."""
-    import hashlib
+def test_embedding_lsh_integer_planes_match_duckdb(spark):
+    """The one signature path is exact integer arithmetic: (1) the md5
+    plane components are frozen for two tags, so neither the tag scheme
+    nor the Irwin-Hall offset can drift under the committed oracle; (2)
+    the operator's band keys equal the DuckDB oracle's recomputation
+    from the same md5 tags, row for row; (3) the keys do not change
+    under a permuted dimension order, i.e. the float64 matmul is exact
+    in any summation order."""
+    import duckdb
+    import numpy as np
 
     from reactive_data_pipeline_spark.dedup.embedding import (
+        band_keys,
         md5_plane_component,
         md5_planes,
     )
+    from reactive_data_pipeline_spark.queries.llm import _LSH_KEYS
 
-    for tag in ("plane:0:0:0", "plane:31:7:63", "plane:5:3:17"):
-        h = hashlib.md5(tag.encode()).hexdigest()
-        expect = int(h[:15], 16) / 576460752303423488.0 - 1.0
-        assert md5_plane_component(tag) == expect
-        assert -1.0 <= md5_plane_component(tag) < 1.0
-    # Frozen values (computed once by hand): a silent change to the tag
-    # scheme or scale would break the committed driver oracle.
-    assert md5_plane_component("plane:0:0:0") == int(
-        hashlib.md5(b"plane:0:0:0").hexdigest()[:15], 16
-    ) / (1 << 59) - 1.0
-    rows = md5_planes(2, 3, 4)
-    assert [(b, w) for b, w, _ in rows] == [
-        (0, 1), (0, 2), (0, 4), (1, 1), (1, 2), (1, 4)
-    ]
-    assert all(len(p) == 4 for _, _, p in rows)
+    assert md5_plane_component("plane:0:0:0") == -18799
+    assert md5_plane_component("plane:31:7:63") == 57779
 
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path)
+    vectors = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    got = band_keys(vectors, 32, 8, 64)
+    spark_keys = sorted(map(tuple, got.collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    duck_keys = sorted(con.execute(f"WITH {_LSH_KEYS} SELECT id, bk FROM keys").fetchall())
+    assert len(spark_keys) == 32 * emb.count()
+    assert spark_keys == duck_keys
 
-def test_embedding_lsh_sql_signatures_subset_and_cap_noop(spark):
-    """The round-12 graduation path (``signatures="sql"``): md5-plane
-    band keys must still be a verified SUBSET of the exact all-pairs
-    result with identical rounded cosines, non-empty at the check SF
-    (8 pairs measured at sf0.01, recall 8/14 vs the exact twin - the
-    uniform-cube planes are slightly weaker angularly than Gaussian,
-    which is why matmul stays the deployment default), and bit-identical
-    under the ``max_bucket=64`` guard (no bucket near the cap here)."""
-    from reactive_data_pipeline_spark.dedup import (
-        embedding_neardup_lsh,
-        embedding_neardup_pairs,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    exact = {(r.vec_a, r.vec_b): r.cos_sim
-             for r in embedding_neardup_pairs(emb, threshold=0.45).collect()}
-    sql_pairs = {(r.vec_a, r.vec_b): r.cos_sim
-                 for r in embedding_neardup_lsh(
-                     emb, threshold=0.45, signatures="sql").collect()}
-    assert set(sql_pairs) <= set(exact)
-    for k, v in sql_pairs.items():
-        assert v == exact[k]
-    assert len(sql_pairs) >= 0.5 * len(exact) and len(sql_pairs) >= 1
-    capped = {(r.vec_a, r.vec_b): r.cos_sim
-              for r in embedding_neardup_lsh(
-                  emb, threshold=0.45, max_bucket=64, signatures="sql").collect()}
-    assert capped == sql_pairs
+    # Recompute the keys with numpy over a permuted dimension order.
+    ids, vecs = zip(*con.execute("SELECT vec_id, embedding FROM embeddings").fetchall())
+    perm = np.random.RandomState(5).permutation(64)
+    q = np.floor(np.array(vecs, dtype=np.float64) * (1 << 20))[:, perm]
+    bits = (q @ np.ascontiguousarray(md5_planes(32, 8, 64)[:, perm]).T) > 0
+    permuted = bits.reshape(len(q), 32, 8) @ (1 << np.arange(8)) + (np.arange(32) << 8)
+    assert sorted((i, int(k)) for i, row in zip(ids, permuted) for k in row) == duck_keys
 
 
 def test_simhash_fingerprint_distinct_blocking_output_identical(spark):
@@ -550,22 +543,21 @@ def test_knn_fused_matches_separate_legs(spark):
 
 def test_resolve_quotient_auto_switch(spark, monkeypatch):
     """The round-13 data-derived quotient switch: below the size gate
-    the caller's small-scale default applies with no sampling job;
-    above it the sampled mean class multiplicity decides (>= the
-    threshold picks the quotient). Gates monkeypatched so both regimes
-    run on a tiny frame."""
+    the direct path applies with no sampling job; above it the sampled
+    mean class multiplicity decides (>= the threshold picks the
+    quotient). Gates monkeypatched so both regimes run on a tiny
+    frame."""
     from reactive_data_pipeline_spark.dedup import ngram as N
 
     dup = [(i, "same text everywhere for all copies") for i in range(64)]
     uniq = [(1000 + i, f"unique text number {i} with words w{i} w{i+1}") for i in range(8)]
     docs = spark.createDataFrame(dup + uniq, "doc_id long, text string")
 
-    # Below the gate the default rules, no estimate is computed. A
+    # Below the gate the direct path rules, no estimate is computed. A
     # createDataFrame plan has UNKNOWN stats (Long.MaxValue -> routed to
     # the sampling side), so pin the probe to a small value here.
     monkeypatch.setattr(N, "_plan_size_bytes", lambda df: 1 << 10)
-    assert N.resolve_quotient(docs, 3, "text", "doc_id", small_default=False) is False
-    assert N.resolve_quotient(docs, 3, "text", "doc_id", small_default=True) is True
+    assert N.resolve_quotient(docs, 3, "text", "doc_id") is False
 
     # Above the gate: multiplicity (72 docs / ~9 distinct sets ~ 8)
     # crosses a low threshold and not a high one.
@@ -573,9 +565,9 @@ def test_resolve_quotient_auto_switch(spark, monkeypatch):
     est = N.estimate_class_multiplicity(docs, 3)
     assert est > 2.0
     monkeypatch.setattr(N, "QUOTIENT_MIN_MULTIPLICITY", 2.0)
-    assert N.resolve_quotient(docs, 3, "text", "doc_id", small_default=False) is True
+    assert N.resolve_quotient(docs, 3, "text", "doc_id") is True
     monkeypatch.setattr(N, "QUOTIENT_MIN_MULTIPLICITY", 1e9)
-    assert N.resolve_quotient(docs, 3, "text", "doc_id", small_default=False) is False
+    assert N.resolve_quotient(docs, 3, "text", "doc_id") is False
 
 
 def test_exact_class_collapse_mega_class(spark):

@@ -16,11 +16,11 @@ from reactive_data_pipeline_spark.queries import QUERIES  # noqa: E402
 #: here (round-6 verdict #2); the assertion below keeps the set exact,
 #: so a new rows-only registration without a reason fails this report.
 ROWS_ONLY_WHY: dict[str, str] = {
-    # round-12: embedding_neardup_lsh - the LAST rows-only entry -
-    # graduated to an exact oracle (md5-derived hyperplanes evaluated
-    # as sequential folds; DuckDB regenerates identical signatures,
-    # banding, candidates, and verified cosines). The catalog carries
-    # ZERO rows-only entries; a new one needs a justification here.
+    # embedding_neardup_lsh - the last rows-only entry - carries an
+    # exact oracle: its band keys are integer md5-plane dots that DuckDB
+    # regenerates bit for bit, so signatures, banding, candidates and
+    # verified cosines are all hash-checked. The catalog carries ZERO
+    # rows-only entries; a new one needs a justification here.
 }
 
 
