@@ -7,8 +7,9 @@ SCD2); this is the general form for mutable reference data: each
 upsert batch touches only the hash-buckets of the keys it carries, and
 conflicts resolve by a version column (ties favor the incoming batch).
 
-Scale shape (same arithmetic as the other merge sinks): per batch,
-read ONLY touched buckets (partition pruning), one key-partitioned
+Scale shape (the touched-partition rewrite every merge sink shares,
+``streaming.merge_util.rewrite_touched_partitions``): per batch, read
+ONLY touched buckets (partition pruning), one key-partitioned
 ``max_by`` to resolve winners (partial-aggregates map-side), one
 dynamic partition overwrite. Bucket count sizes a bucket's rewrite to
 executor memory. Re-applying a batch is a no-op (max_by of identical
@@ -19,8 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..streaming.merge_util import existing_or_empty
+from ..streaming.merge_util import rewrite_touched_partitions
 
 UPSERT_BUCKETS = 64
 
@@ -39,39 +41,26 @@ def upsert_partitioned(
     full table schema (minus the managed ``bucket``/``__src`` columns).
     """
     data_cols = updates.columns
-    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
-    tagged = updates.withColumn("bucket", bucket).persist()
-    buckets = [r["bucket"] for r in tagged.select("bucket").distinct().collect()]
-    if not buckets:
-        tagged.unpersist()
-        return
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in updates.schema.fields]
-        + ["`bucket` bigint"]
-    )
-    existing = existing_or_empty(
-        spark, path, schema=schema, prune=F.col("bucket").isin(buckets)
-    )
-    merged = (
-        existing.withColumn("__src", F.lit(0))
-        .unionByName(tagged.withColumn("__src", F.lit(1)))
-        .groupBy(*key_cols)
-        .agg(
-            F.max_by(
-                F.struct(*[c for c in data_cols if c not in key_cols], "bucket"),
-                F.struct(F.col(version_col).alias("v"), F.col("__src").alias("s")),
-            ).alias("__win")
+    schema = T.StructType([*updates.schema.fields, T.StructField("bucket", T.LongType())])
+
+    def merge(existing: DataFrame, tagged: DataFrame) -> DataFrame:
+        return (
+            existing.withColumn("__src", F.lit(0))
+            .unionByName(tagged.withColumn("__src", F.lit(1)))
+            .groupBy(*key_cols)
+            .agg(
+                F.max_by(
+                    F.struct(*[c for c in data_cols if c not in key_cols], "bucket"),
+                    F.struct(F.col(version_col).alias("v"), F.col("__src").alias("s")),
+                ).alias("__win")
+            )
+            .select(*key_cols, "__win.*")
         )
-        .select(*key_cols, "__win.*")
+
+    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+    rewrite_touched_partitions(
+        updates.withColumn("bucket", bucket), path, "bucket", schema, merge
     )
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    tagged.unpersist()
 
 
 def read_upserted(spark: SparkSession, path: str) -> DataFrame:
@@ -127,35 +116,32 @@ def delete_keys(
     an absent key is a no-op; idempotent under replay."""
     bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
     tagged = keys.select(*key_cols).distinct().withColumn("bucket", bucket).persist()
-    buckets = [r["bucket"] for r in tagged.select("bucket").distinct().collect()]
-    if not buckets:
-        tagged.unpersist()
-        return
     try:
+        buckets = [r["bucket"] for r in tagged.select("bucket").distinct().collect()]
+        if not buckets:
+            return
         existing = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    except Exception:
-        tagged.unpersist()
-        raise
-    remaining = existing.join(
-        F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
-    )
-    remaining = remaining.localCheckpoint(eager=True)
-    # Dynamic overwrite only replaces partitions PRESENT in the write:
-    # a bucket whose every row was deleted would keep its old files.
-    # Those buckets are removed explicitly through the Hadoop FS.
-    present = {
-        r["bucket"] for r in remaining.select("bucket").distinct().collect()
-    }
-    if present:
-        (
-            remaining.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
+        remaining = existing.join(
+            F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
         )
-    jvm = spark._jvm  # type: ignore[attr-defined]
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
-    for b in set(buckets) - present:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/bucket={b}"), True)
-    tagged.unpersist()
+        remaining = remaining.localCheckpoint(eager=True)
+        # Dynamic overwrite only replaces partitions PRESENT in the write:
+        # a bucket whose every row was deleted would keep its old files.
+        # Those buckets are removed explicitly through the Hadoop FS.
+        present = {
+            r["bucket"] for r in remaining.select("bucket").distinct().collect()
+        }
+        if present:
+            (
+                remaining.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(path)
+            )
+        jvm = spark._jvm  # type: ignore[attr-defined]
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
+        for b in set(buckets) - present:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/bucket={b}"), True)
+    finally:
+        tagged.unpersist()

@@ -798,9 +798,12 @@ def embedding_neardup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over 64 dims: plane component c = the sum over j = 0..3 of
 # int(md5('plane:band:bit:i:j')[:5 hex]) minus 2^21, vector component
 # q = floor(double(x) * 2^20), and bucket bit ``bit`` is set iff the
-# integer SUM(q * c) > 0. Integer arithmetic is exact in both engines
-# (the Spark side's float64 matmul provably so), so DuckDB regenerates
-# the IDENTICAL keys, banded candidate set, and verified cosines.
+# integer dot SUM(q * c) > 0. Both engines take that dot in float64
+# (Spark a numpy matmul, DuckDB list_dot_product over DOUBLE[] casts),
+# which is exact in any summation order while max|x| * dim < 4096:
+# |q * c| <= max|x| * 2^41, so every product and partial sum stays
+# below 2^53. DuckDB therefore regenerates the IDENTICAL keys, banded
+# candidate set, and verified cosines.
 _LSH_KEYS = """
     planes AS (
       SELECT band, bit, list(c ORDER BY i) AS c FROM (
@@ -818,7 +821,7 @@ _LSH_KEYS = """
     ),
     keys AS (
       SELECT e.id, CAST(p.band AS BIGINT) * 256
-               + CAST(SUM(CASE WHEN list_sum([e.q[i] * p.c[i] FOR i IN generate_series(1, 64)]) > 0
+               + CAST(SUM(CASE WHEN list_dot_product(CAST(e.q AS DOUBLE[]), CAST(p.c AS DOUBLE[])) > 0
                           THEN CAST(1 AS BIGINT) << p.bit ELSE 0 END) AS BIGINT) AS bk
       FROM quant e CROSS JOIN planes p
       GROUP BY e.id, p.band

@@ -18,8 +18,8 @@ update-output mode emits only the fingerprints a batch touched, and
 ``merge_dedup_registry_batch`` folds them into a bucket-partitioned
 registry table by monotone merge (min keeper id / max copy count), so
 a replayed micro-batch is a provable no-op and each trigger rewrites
-only the buckets it touched - the
-``reactive.merge_ticker_meta_batch`` contract applied to dedup state.
+only the buckets it touched (``merge_util.rewrite_touched_partitions``,
+the protocol every merge sink shares).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import fingerprint_md5
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import rewrite_touched_partitions
 
 #: Bucket count for the materialized registry. At harness scale this is
 #: plumbing; at corpus scale set it so one bucket's registry shard fits
@@ -38,6 +38,8 @@ from .merge_util import existing_or_empty
 #: ~50 B = ~12 GB per bucket -> use 65536 there; it is a table-layout
 #: constant, not a code change).
 REGISTRY_BUCKETS = 16
+
+_REGISTRY_SCHEMA = "fingerprint string, keeper_doc_id long, n_copies long, bucket long"
 
 
 def dedup_registry_stream(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -83,50 +85,30 @@ def merge_dedup_registry_batch(updates: DataFrame, out_path: str) -> None:
 
     ``updates`` carries the full current aggregate for every fingerprint
     the batch touched (update-mode streaming aggregations re-emit the
-    whole state row for changed keys, not deltas). The merge is
-    monotone - ``min(keeper_doc_id)``, ``max(n_copies)`` - so replaying
-    a failed batch, or even re-applying an old batch after a newer one,
+    whole state row for changed keys, not deltas). The update rows are
+    bucketed by fingerprint hash and folded into ONLY the touched
+    buckets (`merge_util.rewrite_touched_partitions`) by a monotone
+    merge - ``min(keeper_doc_id)``, ``max(n_copies)`` - so replaying a
+    failed batch, or even re-applying an old batch after a newer one,
     leaves the table unchanged: min of a shrinking id is stable, max of
-    a growing count is stable. Steps mirror
-    ``reactive.merge_ticker_meta_batch``:
-
-    1. bucket the update rows by fingerprint hash;
-    2. read ONLY the touched buckets of the existing table (partition
-       pruning on the ``bucket`` column - O(touched), not O(table));
-    3. union + monotone re-aggregate, dynamic-overwrite those buckets.
+    a growing count is stable.
     """
-    spark = updates.sparkSession
+
+    def merge(existing: DataFrame, partial: DataFrame) -> DataFrame:
+        return (
+            existing.unionByName(partial)
+            .groupBy("fingerprint")
+            .agg(
+                F.min("keeper_doc_id").alias("keeper_doc_id"),
+                F.max("n_copies").alias("n_copies"),
+                F.min("bucket").alias("bucket"),  # constant per fingerprint
+            )
+        )
+
     partial = updates.withColumn(
         "bucket", F.pmod(F.xxhash64("fingerprint"), F.lit(REGISTRY_BUCKETS))
-    ).persist()
-    buckets = [r["bucket"] for r in partial.select("bucket").distinct().collect()]
-    if not buckets:
-        partial.unpersist()
-        return
-    existing = existing_or_empty(
-        spark, out_path, partial, prune=F.col("bucket").isin(buckets)
     )
-    merged = (
-        existing.unionByName(partial)
-        .groupBy("fingerprint")
-        .agg(
-            F.min("keeper_doc_id").alias("keeper_doc_id"),
-            F.max("n_copies").alias("n_copies"),
-            F.min("bucket").alias("bucket"),  # constant per fingerprint
-        )
-    )
-    # Materialize before writing: the overwrite targets the very files
-    # the plan reads, and only dynamic-overwrite's deferred deletion
-    # makes that safe today - a checkpointed result removes the
-    # read-what-you-delete dependency entirely.
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )
-    partial.unpersist()
+    rewrite_touched_partitions(partial, out_path, "bucket", _REGISTRY_SCHEMA, merge)
 
 
 def streaming_dedup_update_run(

@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from ..operators.ticker import build_ticker_meta, derive_ticker
 from ..sources.registry import read_stream
-from .merge_util import existing_or_empty
+from .merge_util import rewrite_touched_partitions
 from .. import schemas
 
 
@@ -73,46 +73,25 @@ def events_stream(
 
 
 def merge_ticker_meta_batch(batch: DataFrame, out_path: str) -> None:
-    """Merge one micro-batch's partial min/max into the derived table.
+    """Merge one micro-batch's partial min/max into the derived table:
+    the batch's per-(symbol, day) partials (map-side; a batch touches
+    few days) are unioned with ONLY those day partitions of the table
+    and re-aggregated by monotone min/max
+    (`merge_util.rewrite_touched_partitions`)."""
 
-    1. aggregate the batch to per-(symbol, day) partials (map-side; a
-       batch touches few days);
-    2. read ONLY those day partitions of the existing table (partition
-       pruning on the ``partition`` column);
-    3. union + re-aggregate (monotone merge) and overwrite just those
-       partitions (dynamic partitionOverwriteMode).
-    """
-    spark = batch.sparkSession
-    # Persist the tiny partial aggregate: it is consumed twice (affected-day
-    # listing + merge write) and caching avoids re-reading the batch files.
-    partial = build_ticker_meta(derive_ticker(batch)).persist()
-    days = [r["partition"] for r in partial.select("partition").distinct().collect()]
-    if not days:
-        partial.unpersist()
-        return
-    existing = existing_or_empty(
-        spark, out_path, partial, prune=F.col("partition").isin(days)
-    )
-    merged = (
-        existing.unionByName(partial)
-        .groupBy("symbol", "partition")
-        .agg(
-            F.max("monthly_max_market_price").alias("monthly_max_market_price"),
-            F.min("monthly_min_market_price").alias("monthly_min_market_price"),
+    def merge(existing: DataFrame, partial: DataFrame) -> DataFrame:
+        return (
+            existing.unionByName(partial)
+            .groupBy("symbol", "partition")
+            .agg(
+                F.max("monthly_max_market_price").alias("monthly_max_market_price"),
+                F.min("monthly_min_market_price").alias("monthly_min_market_price"),
+            )
+            .select("symbol", "monthly_max_market_price", "monthly_min_market_price", "partition")
         )
-        .select("symbol", "monthly_max_market_price", "monthly_min_market_price", "partition")
-    )
-    # Materialize before writing: the overwrite targets the very files
-    # the plan reads; a checkpointed result removes that dependency
-    # instead of leaning on dynamic-overwrite's deferred deletion.
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition")
-        .parquet(out_path)
-    )
-    partial.unpersist()
+
+    partial = build_ticker_meta(derive_ticker(batch))
+    rewrite_touched_partitions(partial, out_path, "partition", schemas.TICKER_META, merge)
 
 
 def reactive_ticker_meta_run(

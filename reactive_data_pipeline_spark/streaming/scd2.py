@@ -3,9 +3,9 @@
 The reactive-warehouse counterpart of the batch build
 (`queries/etl.py::scd2_user_tier_dim`): each micro-batch of events
 folds into a persistent type-2 dimension table, touching only the
-hash-buckets of the users the batch observed - the
-`reactive.merge_ticker_meta_batch` merge-sink pattern applied to
-interval maintenance.
+hash-buckets of the users the batch observed. It is the shared
+touched-partition rewrite (`merge_util.rewrite_touched_partitions`)
+applied to interval maintenance.
 
 Per trigger:
 
@@ -22,7 +22,7 @@ Per trigger:
    duplicate observations) - exactly-once effects from at-least-once
    delivery;
 5. union with the untouched users' rows and dynamic-overwrite the
-   touched buckets (localCheckpoint first: never read-what-you-delete).
+   touched buckets.
 
 Arrival-order contract: per user, a batch's events must not predate an
 already-recorded change point (the file-stream / bus sources deliver in
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.scd import scd2_intervals
-from .merge_util import existing_or_empty
+from .merge_util import rewrite_touched_partitions
 
 SCD2_BUCKETS = 64
 
@@ -66,46 +66,28 @@ def _bucket(col: str = "user_id"):
 
 def merge_scd2_batch(batch: DataFrame, out_path: str) -> None:
     """Fold one micro-batch of raw events into the dimension table."""
-    spark = batch.sparkSession
-    obs = event_observations(batch).persist()
-    buckets = [
-        r["b"] for r in obs.select(_bucket().alias("b")).distinct().collect()
-    ]
-    if not buckets:
-        obs.unpersist()
-        return
-    existing = existing_or_empty(
-        spark,
-        out_path,
-        schema=_DIM_SCHEMA,
-        prune=F.col("bucket").isin(buckets),
-    )
-    batch_users = obs.select("user_id").distinct()
-    touched = existing.join(F.broadcast(batch_users), "user_id", "left_semi")
-    untouched = existing.join(F.broadcast(batch_users), "user_id", "left_anti")
 
-    # Stored change points, re-expressed as observations. valid_from_us
-    # is the change's own event time; event_id keeps the total order
-    # stable and makes a replayed batch's union collapse in distinct().
-    hist_obs = touched.select(
-        "user_id",
-        "event_id",
-        F.col("valid_from_us").alias("ts_us"),
-        "tier",
-    )
-    all_obs = hist_obs.unionByName(obs.select(*hist_obs.columns)).distinct()
-    rebuilt = scd2_intervals(all_obs, keep_event_id=True).withColumn(
-        "bucket", _bucket()
-    )
-    merged = untouched.unionByName(rebuilt.select(*untouched.columns))
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )
-    obs.unpersist()
+    def merge(existing: DataFrame, obs: DataFrame) -> DataFrame:
+        batch_users = obs.select("user_id").distinct()
+        touched = existing.join(F.broadcast(batch_users), "user_id", "left_semi")
+        untouched = existing.join(F.broadcast(batch_users), "user_id", "left_anti")
+        # Stored change points, re-expressed as observations. valid_from_us
+        # is the change's own event time; event_id keeps the total order
+        # stable and makes a replayed batch's union collapse in distinct().
+        hist_obs = touched.select(
+            "user_id",
+            "event_id",
+            F.col("valid_from_us").alias("ts_us"),
+            "tier",
+        )
+        all_obs = hist_obs.unionByName(obs.select(*hist_obs.columns)).distinct()
+        rebuilt = scd2_intervals(all_obs, keep_event_id=True).withColumn(
+            "bucket", _bucket()
+        )
+        return untouched.unionByName(rebuilt.select(*untouched.columns))
+
+    obs = event_observations(batch).withColumn("bucket", _bucket())
+    rewrite_touched_partitions(obs, out_path, "bucket", _DIM_SCHEMA, merge)
 
 
 def scd2_stream_run(

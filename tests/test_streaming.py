@@ -13,6 +13,7 @@ from reactive_data_pipeline_spark.operators.ticker import build_ticker_meta, der
 from reactive_data_pipeline_spark.sources import read_table
 from reactive_data_pipeline_spark.streaming import (
     ObservedMetrics,
+    merge_ticker_meta_batch,
     reactive_ticker_meta_run,
     read_ticker_meta,
 )
@@ -100,3 +101,25 @@ def test_observe_metrics_captured(spark, dirs):
     finally:
         spark.streams.removeListener(listener)
     assert any(m.get("rows", 0) > 0 for m in listener.rows)
+
+
+def test_ticker_merge_into_existing_table_submits_three_jobs(spark, tmp_path):
+    """A ticker micro-batch that merges into an existing table is at
+    most three Spark jobs: the touched-day listing, the eager checkpoint
+    of the merged rows and the partition write. Reading the table with
+    its declared schema submits no schema-inference job. Structured
+    Streaming runs every micro-batch with adaptive execution off, so the
+    static batch here does too."""
+    out = str(tmp_path / "ticker_meta")
+    events = read_table(spark, SF_DIR, "events").filter(F.col("event_id") % 5 == 0)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        merge_ticker_meta_batch(events, out)
+        sc.setJobGroup("ticker_merge_jobs", "merge into an existing table")
+        merge_ticker_meta_batch(events, out)
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup("ticker_merge_jobs")) <= 3

@@ -3,15 +3,19 @@ incremental convergence as new document files arrive."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from reactive_data_pipeline_spark.dedup import exact_dedup_groups
+from reactive_data_pipeline_spark.operators.upsert import upsert_partitioned
 from reactive_data_pipeline_spark.sources import read_table
 from reactive_data_pipeline_spark.streaming import (
     merge_dedup_registry_batch,
+    merge_ticker_meta_batch,
     streaming_dedup_run,
     streaming_dedup_update_run,
 )
+from reactive_data_pipeline_spark.streaming.scd2 import merge_scd2_batch
 
 from .conftest import SF_DIR
 from .helpers import assert_df_equal
@@ -121,21 +125,41 @@ def test_merge_replay_is_noop(spark, tmp_path):
     assert pd_sort(after_full).equals(pd_sort(final))
 
 
-def test_merge_fails_on_corrupt_registry_instead_of_data_loss(spark, tmp_path):
-    """A transient/corrupt read of a NON-EMPTY registry must fail the
-    micro-batch (checkpoint retries it) - never be treated as 'first
-    batch', which would dynamic-overwrite the touched buckets from the
-    batch alone and silently delete co-bucketed entries."""
-    import pytest
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    out = str(tmp_path / "registry")
-    docs = read_table(spark, SF_DIR, "documents").limit(20)
-    updates = exact_dedup_groups(docs)
-    merge_dedup_registry_batch(updates, out)
+
+def _merge_sink(spark, sink, out):
+    """One of the four merge sinks, bound to a small static batch."""
+    if sink == "ticker":
+        events = read_table(spark, SF_DIR, "events").limit(50)
+        return lambda: merge_ticker_meta_batch(events, out)
+    if sink == "dedup":
+        updates = exact_dedup_groups(read_table(spark, SF_DIR, "documents").limit(20))
+        return lambda: merge_dedup_registry_batch(updates, out)
+    if sink == "scd2":
+        events = read_table(spark, SF_DIR, "events").limit(50)
+        return lambda: merge_scd2_batch(events, out)
+    rows = spark.createDataFrame(
+        [(i, f"v{i}", 1) for i in range(20)], "id long, val string, ver long"
+    )
+    return lambda: upsert_partitioned(spark, out, rows, ["id"], "ver")
+
+
+@pytest.mark.parametrize("sink", ["ticker", "dedup", "scd2", "upsert"])
+def test_merge_fails_on_corrupt_registry_instead_of_data_loss(spark, tmp_path, sink):
+    """A transient/corrupt read of a NON-EMPTY table must fail the
+    micro-batch (checkpoint retries it) - never be treated as 'first
+    batch', which would dynamic-overwrite the touched partitions from
+    the batch alone and silently delete co-partitioned entries. The
+    failed merge must not leave its batch partial cached either."""
+    out = str(tmp_path / "table")
+    merge = _merge_sink(spark, sink, out)
+    merge()
     n_before = spark.read.parquet(out).count()
     assert n_before > 0
 
-    # corrupt every parquet footer under the registry root
+    # corrupt every parquet footer under the table root
     import glob as _glob
     import os
 
@@ -144,10 +168,14 @@ def test_merge_fails_on_corrupt_registry_instead_of_data_loss(spark, tmp_path):
             fh.seek(0, os.SEEK_END)
             size = fh.tell()
             fh.truncate(max(4, size // 2))
+    cached = _persistent_rdd_ids(spark)
     with pytest.raises(Exception) as exc:
-        merge_dedup_registry_batch(updates, out)
+        merge()
     # the failure is a read error, not a silent success
     assert "PATH_NOT_FOUND" not in str(exc.value)
+    # no RDD registered by the failed call is left persisted (a set, not
+    # a count: the context cleaner may free older RDDs meanwhile)
+    assert _persistent_rdd_ids(spark) <= cached
 
 
 def test_merge_bootstraps_only_on_missing_path(spark, tmp_path):
