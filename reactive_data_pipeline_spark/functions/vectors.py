@@ -36,8 +36,11 @@ def l2_norm(a: Column | str) -> Column:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL-safe only insofar as null arrays yield null."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine similarity. NULL when either array is NULL, holds a NULL,
+    the lengths differ, or either norm is 0: ``try_divide`` gives NULL
+    where ANSI ``/`` would raise DIVIDE_BY_ZERO, as DuckDB's ``x / 0.0``
+    does."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def quantize_scale(a: Column | str, bits: int = 8) -> Column:

@@ -525,29 +525,9 @@ def _cos_sql(a: str, b: str) -> str:
     bench=True,
 )
 def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 cosine neighbors of vec_id=0 (broadcast query row +
-    TakeOrderedAndProject; see similarity.brute)."""
+    """Exact top-10 cosine neighbors of vec_id=0 (the dense Arrow kernel
+    with one query, then TakeOrderedAndProject; see similarity.dense)."""
     return knn_brute(_emb(spark, sf_dir), query_id=0, k=10)
-
-
-@register(
-    "knn_pandas_cosine",
-    oracle=f"""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, round(cos, 6) AS cos_sim FROM (
-      SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos
-      FROM embeddings e, q WHERE e.vec_id <> 0
-    ) ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """,
-    tags=("similarity", "pandas_udf"),
-)
-def knn_pandas_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-vectorized pandas_udf scorer under the SAME oracle as
-    knn_brute_cosine - the Python hot path held to the JVM value-hash
-    standard (similarity.pandas_knn)."""
-    from ..similarity import knn_pandas
-
-    return knn_pandas(_emb(spark, sf_dir), query_id=0, k=10)
 
 
 @register(
@@ -568,9 +548,9 @@ def knn_pandas_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_batch_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch retrieval: exact top-10 per query for the whole query set
-    (every 100th vector). Broadcast query block, one local score pass
-    over the corpus, one query-keyed exchange for the ranking - see
-    similarity.brute.knn_batch for the scale notes."""
+    (every 100th vector). The query block is collected at build time,
+    one Arrow pass scores the corpus and keeps per-batch candidates, and
+    a row_number ranks only those - see similarity.dense."""
     from ..similarity import knn_batch
 
     emb = _emb(spark, sf_dir)

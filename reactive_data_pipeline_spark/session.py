@@ -31,6 +31,17 @@ Scale notes (targeting a multi-executor cluster even though we test on
   testdata's ``events.ts`` column is parquet TIMESTAMP(NANOS), which Spark
   otherwise refuses to read; :mod:`reactive_data_pipeline_spark.sources`
   normalizes the long nanoseconds back to a timestamp column.
+* Python workers fork from :mod:`reactive_data_pipeline_spark.daemon`
+  (``spark.python.daemon.module``) instead of ``pyspark.daemon``. Every
+  Python task calls ``importlib.invalidate_caches()``, and on CPython
+  3.11 that re-reads the central directory of each zip archive on the
+  worker's path - 16 cached importers over ``pyspark.zip``, py4j and the
+  spark-core jar, 26,672 entries, 0.27-0.44 s per task. The engine's
+  daemon re-reads an archive only when its mtime or size changed (pinned
+  by ``tests/test_engine_assumptions.py``, assumption 5).
+  Workers already import this package to unpickle the engine's pandas
+  UDFs, so this adds no import requirement: the package must be
+  importable by the executors' Python at daemon start.
 """
 
 from __future__ import annotations
@@ -58,8 +69,11 @@ ENGINE_CONF: dict[str, str] = {
     # events.parquet stores TIMESTAMP(NANOS); see module docstring.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow transfer for the few pandas-UDF operators (multimodal,
-    # fingerprints); everything else stays JVM-side.
+    # fingerprints, the dense similarity kernel); everything else stays
+    # JVM-side.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python workers skip the per-task zip re-read; see module docstring.
+    "spark.python.daemon.module": "reactive_data_pipeline_spark.daemon",
     # Streaming: allow stateful operators to be chained after aggregations.
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
 }

@@ -1,11 +1,11 @@
 """Similarity search over embedding columns (SURVEY.md section 7.5):
-brute-force cosine top-k as the exact baseline; hyperplane-LSH bucketing
-and an IVF (k-means inverted-file) index as the scale paths."""
+brute-force cosine top-k as the exact baseline (one dense Arrow kernel,
+similarity.dense); hyperplane-LSH bucketing and an IVF (k-means
+inverted-file) index as the scale paths."""
 
 from .brute import knn_batch, knn_brute
 from .lsh import hyperplanes, with_lsh_bucket, knn_lsh, knn_lsh_and_brute
 from .ivf import ivf_assign, knn_ivf, knn_ivf_and_brute
-from .pandas_knn import knn_pandas
 
 __all__ = [
     "knn_brute",
@@ -17,5 +17,4 @@ __all__ = [
     "ivf_assign",
     "knn_ivf",
     "knn_ivf_and_brute",
-    "knn_pandas",
 ]

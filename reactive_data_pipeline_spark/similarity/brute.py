@@ -1,20 +1,21 @@
 """Brute-force cosine top-k (exact ANN baseline).
 
-The query vector rides along as a broadcast single-row DataFrame (no
-driver collect), cosine is a JVM higher-order-function expression, and
-the top-k plans as TakeOrderedAndProject - so the full scan is one pass,
-embarrassingly parallel, with k rows per partition surviving to the
-merge. This is the correct *exact* shape at any scale; LSH (similarity.
-lsh) trades recall for scan fraction.
+Both entry points are calls to the exact dense kernel,
+:func:`.dense.topk`: the query vectors are collected once at build time,
+one Arrow pass scores every corpus batch against all of them and keeps
+only the candidates that can reach the top k, and a rank over those
+survivors finishes. The corpus is never joined, broadcast against or
+shuffled by query; LSH (similarity.lsh) and IVF (similarity.ivf) trade
+recall for scan fraction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine
 from ..operators.relational import top_k
+from .dense import topk
 
 
 def knn_brute(
@@ -25,17 +26,10 @@ def knn_brute(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k most-cosine-similar rows to the row with ``query_id``
-    (excluded from results). Columns: vec_id, cos_sim."""
-    q = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    scored = (
-        emb.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine(vec_col, "__q"), 6).alias("cos_sim"),
-        )
-    )
-    return top_k(scored, [F.desc("cos_sim"), F.asc("vec_id")], k)
+    (excluded from results). Columns: vec_id, cos_sim, in rank order
+    under a ``TakeOrderedAndProject``."""
+    hits = topk(emb, emb.filter(F.col(id_col) == query_id), k, id_col, vec_col)
+    return top_k(hits.select("vec_id", "cos_sim"), [F.desc("cos_sim"), F.asc("vec_id")], k)
 
 
 def knn_batch(
@@ -51,30 +45,11 @@ def knn_batch(
     Columns: query_id, vec_id, cos_sim, rank (1..k per query_id, total
     order: cos desc, vec_id asc).
 
-    Shape at scale: the query set broadcasts (query batches are KBs-MBs
-    against a TB corpus), every corpus partition scores all queries
-    locally (BroadcastNestedLoopJoin - a *deliberate* one: it IS the
-    dense score matrix, linear in corpus x queries with zero corpus
-    shuffle), then one exchange keyed query_id ranks the per-query
-    top-k. The shuffle carries only (query, candidate, score) triples -
-    never vectors. For huge query sets, chunk the queries and union, or
-    move to the bucketed LSH/IVF paths (similarity.lsh / similarity.ivf)
-    which prune candidates before scoring."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q")
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine(vec_col, "__q"), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    The query block is collected to the driver at build time (query
+    batches are KBs-MBs against a TB corpus) and each Arrow batch of the
+    corpus keeps about k candidates per query, so only (query,
+    candidate, score) triples reach the rank - never vectors. For huge
+    query sets, chunk the queries and union, or move to the bucketed
+    LSH/IVF paths (similarity.lsh / similarity.ivf), which prune
+    candidates before scoring."""
+    return topk(emb, queries, k, id_col, vec_col)

@@ -816,3 +816,111 @@ def test_simhash_md5_keying_matches_hashlib_and_bruteforce(spark):
     )
     got_pairs = sorted(tuple(r) for r in simhash_near_pairs(docs, keying="md5").collect())
     assert got_pairs == exp
+
+
+def _hof_knn(emb, queries, k):
+    """The pre-kernel exact path, kept as the tests' reference: the
+    ``cosine`` HOF fold over a broadcast nested-loop join, ranked by a
+    window over every scored pair."""
+    from pyspark.sql import Window
+
+    from reactive_data_pipeline_spark.functions.vectors import cosine
+
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__q"))
+    scored = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", F.round(cosine("embedding", "__q"), 6).alias("cos_sim")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def test_knn_batch_zero_null_and_empty_vectors_rank_last(spark):
+    """A zero or empty vector has no cosine: NULL (DuckDB's x / 0.0),
+    not ANSI DIVIDE_BY_ZERO, and it ranks after every scored row, by id,
+    like a NULL vector. A zero query scores nothing."""
+    from reactive_data_pipeline_spark.functions.vectors import cosine
+    from reactive_data_pipeline_spark.similarity import knn_batch
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, [0.0, 0.0, 0.0]),
+        (3, []),
+        (4, None),
+        (5, [0.5, 0.5, 0.1]),
+        (6, [0.0, 0.0, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(map(tuple, knn_batch(emb, emb.filter("vec_id IN (0, 6)"), k=5).collect()))
+    assert got == sorted(map(tuple, _hof_knn(emb, emb.filter("vec_id IN (0, 6)"), 5).collect()))
+    by_query = {}
+    for qid, vid, cos, rank in sorted(got, key=lambda r: (r[0], r[3])):
+        by_query.setdefault(qid, []).append((vid, cos))
+    assert [v for v, _ in by_query[0]] == [1, 5, 2, 3, 4]
+    assert [c is None for _, c in by_query[0]] == [False, False, True, True, True]
+    assert by_query[6] == [(0, None), (1, None), (2, None), (3, None), (4, None)]
+    zero = emb.filter("vec_id = 2").select(F.col("embedding").alias("z"))
+    assert {r.c for r in emb.crossJoin(zero).select(cosine("embedding", "z").alias("c")).collect()} == {None}
+
+
+def test_dense_cosines_equal_the_hof_fold_bit_for_bit(spark):
+    """The kernel's unrounded scores are the ``cosine`` expression's
+    doubles, not merely equal after 6-dp rounding: same fold order, same
+    norms, same division."""
+    import numpy as np
+
+    from reactive_data_pipeline_spark.functions.vectors import cosine
+    from reactive_data_pipeline_spark.similarity import dense
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    pdf = emb.select("vec_id", F.col("embedding").cast("array<double>")).toPandas()
+    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+    A, la = dense._block(pdf["embedding"].to_numpy(), 64)
+    q = (pdf["vec_id"] % 100 == 0).to_numpy()
+    got = dense.cosines(A, la, A[q], la[q])
+    qs = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    ref = (
+        emb.crossJoin(qs)
+        .select("vec_id", "query_id", cosine("embedding", "qv").alias("c"))
+        .toPandas()
+        .pivot(index="vec_id", columns="query_id", values="c")
+        .sort_index()
+    )
+    assert list(ref.index) == list(pdf["vec_id"])
+    assert list(ref.columns) == list(pdf["vec_id"][q])
+    assert got.shape == (500, 5)
+    assert np.array_equal(got.view(np.int64), ref.to_numpy().view(np.int64))
+
+
+def test_knn_batch_ties_at_the_k_boundary(spark):
+    """Duplicate and near-duplicate vectors straddling rank k, spread
+    over many Arrow batches: each batch keeps every candidate within the
+    margin of its own k-th best, so the rank sees every tie and breaks it
+    by vec_id, exactly as ranking all pairs does."""
+    from reactive_data_pipeline_spark.similarity import knn_batch
+
+    base = [[1.0, 0.0, 0.0], [0.6, 0.8, 0.0], [0.0, 0.6, 0.8]]
+    rows = [(0, base[0]), (1, base[1]), (2, base[2])]
+    # 12 exact duplicates of each query, ids interleaved so every batch
+    # holds some, plus copies nudged by less than a rounding cell.
+    for i in range(36):
+        rows.append((100 - i, list(base[i % 3])))
+    for i in range(9):
+        v = list(base[i % 3])
+        v[2] += 1e-8 * (i + 1)
+        rows.append((200 + i, v))
+    rows.append((300, [0.3, 0.3, 0.3]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = emb.filter("vec_id < 3")
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+    try:
+        for k in (1, 5, 12, 13, 20):
+            got = sorted(map(tuple, knn_batch(emb, queries, k=k).collect()))
+            want = sorted(map(tuple, _hof_knn(emb, queries, k).collect()))
+            assert got == want, k
+            assert len(got) == 3 * k
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

@@ -15,6 +15,9 @@ checklist.
    it.
 4. The radix-digit decomposition in ``exact_sum`` is bit-identical to
    the decimal-buffer sum and is only taken for precision <= 18.
+5. A Python task's ``importlib.invalidate_caches()`` re-reads no zip
+   directory under the engine's worker daemon (on CPython 3.11 with
+   ``pyspark.daemon`` it re-reads 16; see ``session.py``).
 """
 
 import pyspark.sql.functions as F
@@ -227,3 +230,28 @@ def test_radix_digit_overflow_fails_loudly(spark):
     df = spark.createDataFrame([(2**62,), (2**62,), (2**62,)], "v long")
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
         df.agg(F.sum("v")).collect()
+
+
+def test_python_task_rereads_no_zip_directory(spark):
+    """Assumption 5: inside a task, the per-task cache invalidation
+    PySpark's worker performs reads no archive directory again."""
+
+    def count(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    got = spark.range(1, numPartitions=1).mapInPandas(count, "reads int").collect()
+    assert [r.reads for r in got] == [0]
