@@ -527,7 +527,7 @@ def _cos_sql(a: str, b: str) -> str:
 def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors of vec_id=0 (the dense Arrow kernel
     with one query, then TakeOrderedAndProject; see similarity.dense)."""
-    return knn_brute(_emb(spark, sf_dir), query_id=0, k=10)
+    return knn_brute(read_table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 @register(
@@ -553,7 +553,7 @@ def knn_batch_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a row_number ranks only those - see similarity.dense."""
     from ..similarity import knn_batch
 
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     return knn_batch(emb, emb.filter(F.col("vec_id") % 100 == 0), k=10)
 
 

@@ -42,13 +42,32 @@ Scale notes (targeting a multi-executor cluster even though we test on
   Workers already import this package to unpickle the engine's pandas
   UDFs, so this adds no import requirement: the package must be
   importable by the executors' Python at daemon start.
+* Local sessions read and write ``file:`` paths through
+  :mod:`reactive_data_pipeline_spark.jvm`'s Hadoop filesystems
+  (``fs.file.impl`` and ``fs.AbstractFileSystem.file.impl``, classes on
+  ``spark.driver.extraClassPath``). Without the native Hadoop library
+  (not loaded by this Spark build; ``tests/test_engine_assumptions.py``
+  assumption 6) the stock local filesystem forks ``chmod`` for every
+  file create and mkdir and ``readlink`` for every FileContext rename,
+  3-4 ms each on a 4-vCPU host: a streaming
+  trigger's offset log, commit log, state-store files and sink parquet
+  parts all pay it. The engine's classes set permissions through
+  ``java.nio`` and skip ``readlink`` for paths that are not symlinks;
+  ``.crc`` sidecars, umask-applied modes and rename semantics are
+  Hadoop's own. The classes are compiled from source with ``javac`` on
+  first use; without ``javac`` the session keeps the stock filesystem
+  (correct, slower) and logs one warning. Vanilla sessions, cluster
+  masters and ``local-cluster`` (separate executor JVMs) are untouched.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import jvm
 
 #: Engine-wide defaults; applied by :func:`get_spark`.
 ENGINE_CONF: dict[str, str] = {
@@ -121,6 +140,29 @@ def get_spark(
         )
     if extra_conf:
         conf.update(extra_conf)
+    if master and (master == "local" or master.startswith("local[")):
+        # One JVM: the driver's class path is the executors'.
+        _use_fork_free_fs(conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _use_fork_free_fs(conf: dict[str, str]) -> None:
+    """Select the engine's ``file:`` filesystems in ``conf`` (see module
+    docstring), unless they cannot be built or the driver JVM was
+    launched without them; explicit settings win."""
+    classes = jvm.classes_dir()
+    if classes is None:
+        return
+    # The class path is fixed at JVM launch.
+    if SparkContext._jvm is not None:
+        if classes not in SparkContext._jvm.java.lang.System.getProperty("java.class.path"):
+            return
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the JVM before this process.
+        return
+    key = "spark.driver.extraClassPath"
+    conf[key] = os.pathsep.join(filter(None, [conf.get(key), classes]))
+    conf.setdefault("spark.hadoop.fs.file.impl", jvm.FILE_SYSTEM)
+    conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", jvm.ABSTRACT_FILE_SYSTEM)

@@ -140,10 +140,12 @@ def topk(
     query_id, total order: cos_sim desc nulls last, vec_id asc).
 
     Runs one job at build time (the query block's Arrow collect). The
-    plan adds no corpus exchange: a coalesce narrows the corpus to at
-    most :func:`_partitions` tasks, one MapInPandas scores them, and the
-    survivors are ranked (through a query-keyed exchange only when there
-    is more than one task)."""
+    kernel runs :func:`_partitions` tasks: a scan with at least that many
+    partitions is coalesced to it (no corpus exchange), and only a scan
+    with fewer is repartitioned up to it. One MapInPandas scores the
+    tasks, and the survivors are ranked (through a query-keyed exchange
+    only when there is more than one task). Pass the plain scan: a
+    repartition upstream would shuffle the corpus for nothing."""
     q = (
         queries.filter(F.col(id_col).isNotNull())
         .select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
@@ -154,9 +156,13 @@ def topk(
     Q, lq = _block(vecs, max((len(v) for v in vecs if v is not None), default=0))
     id_type = corpus.schema[id_col].dataType.simpleString()
     qid_type = queries.schema[id_col].dataType.simpleString()
+    tasks = _partitions(corpus, len(qids))
+    if corpus.rdd.getNumPartitions() >= tasks:
+        corpus = corpus.coalesce(tasks)
+    else:
+        corpus = corpus.repartition(tasks)
     scored = (
-        corpus.coalesce(_partitions(corpus, len(qids)))
-        .filter(F.col(id_col).isNotNull())
+        corpus.filter(F.col(id_col).isNotNull())
         .select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
         .mapInPandas(
             partial(

@@ -72,11 +72,11 @@ def events_stream(
     return ev
 
 
-def merge_ticker_meta_batch(batch: DataFrame, out_path: str) -> None:
-    """Merge one micro-batch's partial min/max into the derived table:
-    the batch's per-(symbol, day) partials (map-side; a batch touches
-    few days) are unioned with ONLY those day partitions of the table
-    and re-aggregated by monotone min/max
+def merge_ticker_meta_batch(ticker: DataFrame, out_path: str) -> None:
+    """Merge one micro-batch of ``derive_ticker`` rows into the derived
+    table: the batch's per-(symbol, day) min/max partials (map-side; a
+    batch touches few days) are unioned with ONLY those day partitions
+    of the table and re-aggregated by monotone min/max
     (`merge_util.rewrite_touched_partitions`)."""
 
     def merge(existing: DataFrame, partial: DataFrame) -> DataFrame:
@@ -90,7 +90,7 @@ def merge_ticker_meta_batch(batch: DataFrame, out_path: str) -> None:
             .select("symbol", "monthly_max_market_price", "monthly_min_market_price", "partition")
         )
 
-    partial = build_ticker_meta(derive_ticker(batch))
+    partial = build_ticker_meta(ticker)
     rewrite_touched_partitions(partial, out_path, "partition", schemas.TICKER_META, merge)
 
 
@@ -124,6 +124,9 @@ def reactive_ticker_meta_run(
     Pass ``bus`` (a Kafka-wire streaming frame from ``sources.bus``) to
     run off a message bus instead of a file directory - the reference's
     sensor-on-event-log shape with a real broker.
+
+    The ``derive_ticker`` projection is applied to the streaming frame
+    here, once, so each micro-batch's callback builds only the merge.
     """
     ev = events_stream(
         spark,
@@ -139,7 +142,8 @@ def reactive_ticker_meta_run(
             F.max("ts").alias("max_ts"),
         )
     writer = (
-        ev.writeStream.foreachBatch(lambda b, _id: merge_ticker_meta_batch(b, out_path))
+        derive_ticker(ev)
+        .writeStream.foreachBatch(lambda b, _id: merge_ticker_meta_batch(b, out_path))
         .option("checkpointLocation", checkpoint_dir)
         .queryName("reactive_ticker_meta")
     )

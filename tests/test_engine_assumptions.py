@@ -18,6 +18,10 @@ checklist.
 5. A Python task's ``importlib.invalidate_caches()`` re-reads no zip
    directory under the engine's worker daemon (on CPython 3.11 with
    ``pyspark.daemon`` it re-reads 16; see ``session.py``).
+6. The native Hadoop library is not loaded, so Hadoop's stock local
+   filesystem forks ``chmod`` per create/mkdir and ``readlink`` per
+   rename; the engine's ``jvm`` filesystems exist for that (see
+   ``session.py``).
 """
 
 import pyspark.sql.functions as F
@@ -255,3 +259,17 @@ def test_python_task_rereads_no_zip_directory(spark):
 
     got = spark.range(1, numPartitions=1).mapInPandas(count, "reads int").collect()
     assert [r.reads for r in got] == [0]
+
+
+def test_native_hadoop_library_is_not_loaded(spark):
+    """Assumption 6: ``NativeCodeLoader.isNativeCodeLoaded()`` is false,
+    which is why stock ``RawLocalFileSystem.setPermission`` and
+    ``getFileLinkStatus`` fork. If this fails, the native library now
+    loads: the stock filesystem then chmods through JNI (the engine's
+    class already defers to it) and only the ``readlink`` fork remains -
+    re-measure a ticker trigger before deciding whether the engine's
+    filesystem is still needed. Its fallback is the stock filesystem
+    (sessions keep it when ``javac`` is missing)."""
+    jvm = spark._jvm
+    assert not jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded()
+    assert not jvm.org.apache.hadoop.io.nativeio.NativeIO.isAvailable()

@@ -5,6 +5,7 @@ update on new file arrival, and duplicate suppression (R2)."""
 from __future__ import annotations
 
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,9 +99,37 @@ def test_observe_metrics_captured(spark, dirs):
     spark.streams.addListener(listener)
     try:
         _run(spark, src, out, ckpt)
+        # Progress events reach Python listeners asynchronously, possibly
+        # after awaitTermination returns; wait (bounded) before detaching.
+        deadline = time.time() + 30
+        while not listener.rows and time.time() < deadline:
+            time.sleep(0.1)
     finally:
         spark.streams.removeListener(listener)
     assert any(m.get("rows", 0) > 0 for m in listener.rows)
+
+
+def test_ticker_batches_arrive_with_derived_columns(spark, dirs, monkeypatch):
+    """The ticker query applies ``derive_ticker`` to the streaming frame
+    once, at query start: every ``foreachBatch`` frame already carries
+    the derived ticker columns, so the callback builds only the merge."""
+    from reactive_data_pipeline_spark.streaming import reactive
+
+    seen = []
+    merge = reactive.merge_ticker_meta_batch
+
+    def spy(batch, out_path):
+        seen.append(batch.columns)
+        merge(batch, out_path)
+
+    monkeypatch.setattr(reactive, "merge_ticker_meta_batch", spy)
+    src, out, ckpt = dirs
+    events = read_table(spark, SF_DIR, "events").limit(100)
+    events.coalesce(1).write.mode("append").parquet(str(src))
+    _run(spark, src, out, ckpt)
+    assert seen
+    assert all(cols == derive_ticker(events).columns for cols in seen)
+    assert_df_equal(read_ticker_meta(spark, out), build_ticker_meta(derive_ticker(events)))
 
 
 def test_ticker_merge_into_existing_table_submits_three_jobs(spark, tmp_path):
@@ -116,9 +145,9 @@ def test_ticker_merge_into_existing_table_submits_three_jobs(spark, tmp_path):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        merge_ticker_meta_batch(events, out)
+        merge_ticker_meta_batch(derive_ticker(events), out)
         sc.setJobGroup("ticker_merge_jobs", "merge into an existing table")
-        merge_ticker_meta_batch(events, out)
+        merge_ticker_meta_batch(derive_ticker(events), out)
     finally:
         sc._jsc.clearJobGroup()
         spark.conf.set("spark.sql.adaptive.enabled", aqe)

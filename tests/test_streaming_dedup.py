@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reactive_data_pipeline_spark.dedup import exact_dedup_groups
+from reactive_data_pipeline_spark.operators.ticker import derive_ticker
 from reactive_data_pipeline_spark.operators.upsert import upsert_partitioned
 from reactive_data_pipeline_spark.sources import read_table
 from reactive_data_pipeline_spark.streaming import (
@@ -133,7 +134,7 @@ def _merge_sink(spark, sink, out):
     """One of the four merge sinks, bound to a small static batch."""
     if sink == "ticker":
         events = read_table(spark, SF_DIR, "events").limit(50)
-        return lambda: merge_ticker_meta_batch(events, out)
+        return lambda: merge_ticker_meta_batch(derive_ticker(events), out)
     if sink == "dedup":
         updates = exact_dedup_groups(read_table(spark, SF_DIR, "documents").limit(20))
         return lambda: merge_dedup_registry_batch(updates, out)
