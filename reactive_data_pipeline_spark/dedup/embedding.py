@@ -61,35 +61,41 @@ def md5_planes(num_bands: int, bits_per_band: int, dim: int) -> np.ndarray:
     return planes
 
 
-def band_keys(vectors: DataFrame, num_bands: int, bits_per_band: int, dim: int) -> DataFrame:
-    """(id, bk) rows - one per vector and band - of the ``(id, v)``
-    vectors, ``bk = band * 2^bits + bucket``; bucket bit ``bit`` is set
-    iff the integer dot ``floor(v * 2^20) . plane`` is positive. ONE
-    numpy matmul per Arrow batch (a pandas_udf: 256+ dot products per
-    row is matrix work, where interpreted Catalyst HOFs would evaluate
-    16k lambda steps per row).
+def sign_keys(X: np.ndarray, planes: np.ndarray, bits_per_band: int) -> np.ndarray:
+    """(n, bands) int64 sign-LSH keys of the rows of ``X`` under
+    ``planes`` (an :func:`md5_planes` array of ``bands * bits_per_band``
+    rows): ``band * 2^bits + bucket``, where bucket bit ``bit`` is set iff
+    the integer dot ``floor(x * 2^20) . plane`` is positive. The one place
+    that knows the key format; the DuckDB oracle's
+    ``queries.llm._lsh_keys_sql`` is its SQL twin.
 
     Exactness: every quantized component is an integer with
-    ``|q| <= |v| * 2^20 + 1`` and every plane component an integer of
+    ``|q| <= |x| * 2^20 + 1`` and every plane component an integer of
     magnitude at most 2^21, so each product and every partial sum of a
-    dot is an integer of magnitude at most ``(max|v| + 2^-20) * dim *
-    2^41``. The dots are therefore EXACT while ``max|v| * dim < 4096``
+    dot is an integer of magnitude at most ``(max|x| + 2^-20) * dim *
+    2^41``. The dots are therefore EXACT while ``max|x| * dim < 4096``
     (less a 2^-20 * dim rounding margin): everything stays below 2^53,
     so the float64 BLAS matmul is exact in ANY summation order and the
     keys equal DuckDB's integer ``SUM(q * c) > 0``. Unit vectors of dim
     64 sit far inside the bound."""
-    planes = md5_planes(num_bands, bits_per_band, dim)
+    num_bands = len(planes) // bits_per_band
     weights = np.int64(1) << np.arange(bits_per_band, dtype=np.int64)
     offsets = np.arange(num_bands, dtype=np.int64) << bits_per_band
+    bits = (np.floor(X * QUANT_SCALE) @ planes.T) > 0  # (n, bands * bits)
+    return bits.reshape(len(X), num_bands, bits_per_band) @ weights + offsets
 
-    # The closure references no function of this package, so Python
-    # workers unpickle it without importing the package.
+
+def band_keys(vectors: DataFrame, num_bands: int, bits_per_band: int, dim: int) -> DataFrame:
+    """(id, bk) rows - one per vector and band - of the ``(id, v)``
+    vectors, ``bk`` the :func:`sign_keys` key. ONE numpy matmul per Arrow
+    batch (a pandas_udf: 256+ dot products per row is matrix work, where
+    interpreted Catalyst HOFs would evaluate 16k lambda steps per row).
+    The planes are built once here and ride in the UDF's closure."""
+    planes = md5_planes(num_bands, bits_per_band, dim)
+
     @pandas_udf("array<long>")
     def keys(v: pd.Series) -> pd.Series:
-        q = np.floor(np.vstack(v.to_numpy()) * QUANT_SCALE)  # (batch, dim)
-        bits = (q @ planes.T) > 0  # (batch, B*b)
-        buckets = bits.reshape(len(q), num_bands, bits_per_band) @ weights  # (batch, B)
-        return pd.Series(list(buckets + offsets))
+        return pd.Series(list(sign_keys(np.vstack(v.to_numpy()), planes, bits_per_band)))
 
     return vectors.select(
         "id", F.explode(keys(F.col("v").cast("array<double>"))).alias("bk")
@@ -142,7 +148,7 @@ def embedding_neardup_lsh(
     1. signatures - ``num_bands * bits_per_band`` md5-derived integer
        hyperplanes (``md5_planes``); per band the packed sign bits form a
        bucket id (``band_keys``). The integer dots are exact in float64
-       while ``max|x| * dim < 4096`` (see ``band_keys``), so DuckDB
+       while ``max|x| * dim < 4096`` (see ``sign_keys``), so DuckDB
        recomputes the identical keys and the WHOLE pipeline - signatures,
        banding, candidate join, exact-cosine verification - is
        hash-checked end to end.

@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import functools
 import os
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable SQL confs every catalog query depends on; applied
@@ -68,6 +70,15 @@ def _apply_runtime_conf(spark: SparkSession) -> None:
         )
         spark._graft_shuffle_partitions = val
     spark.conf.set("spark.sql.shuffle.partitions", val)
+
+
+def work_dir(prefix: str) -> str:
+    """A new directory for a query's files (streaming sources, sinks and
+    checkpoints; written tables), owned by the active Spark session: it
+    lives under the session's driver temp directory
+    (``SparkFiles.getRootDirectory()``), which Spark deletes when the
+    session stops and when the driver exits."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 @dataclass(frozen=True)
@@ -130,14 +141,18 @@ from . import llm4  # noqa: E402,F401
 #: the AllPairs verification joins are shuffled-hash with bytes-sized
 #: builds (dedup/ngram.py) - consumed by every exact near-dup query
 #: and, via minhash_lsh_pairs' auto default, the minhash family;
-#: (d) streaming_neardup_contract's ground-truth leg is quotient=True.
+#: (d) streaming_neardup_contract's ground-truth leg is quotient=True;
+#: (e) knn_lsh_cosine buckets with the near-dup pipeline's md5 integer
+#: planes, knn_ivf_cosine seeds its cells by md5 and shares
+#: kmeans_embedding_clusters' Lloyd loop (similarity/centroid.py::lloyd),
+#: and the three contracts emit counts their oracles recompute.
 #: Listed: every registered query whose physical plan or shared
 #: machinery changed, including the recall contracts that consume it.
 ROUND_CHANGED: tuple[str, ...] = (
-    "ann_recall_contract",
     "cross_source_dup_matrix",
     "embedding_neardup_lsh",
     "embedding_recall_contract",
+    "kmeans_embedding_clusters",
     "knn_ivf_cosine",
     "knn_lsh_cosine",
     "minhash_dedup_groups",
@@ -171,10 +186,10 @@ CHECK_PRIORITY: tuple[str, ...] = (
     "reactive_ticker_meta_stream",
     "training_data_pipeline_v2",
     # --- this round's changed machinery ---
-    "ann_recall_contract",
     "cross_source_dup_matrix",
     "embedding_neardup_lsh",
     "embedding_recall_contract",
+    "kmeans_embedding_clusters",
     "knn_ivf_cosine",
     "knn_lsh_cosine",
     "minhash_dedup_groups",

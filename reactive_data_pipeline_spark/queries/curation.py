@@ -16,7 +16,7 @@ from ..functions.curation import (
 )
 from ..functions import text as TX
 from ..sources import read_table
-from . import QUERIES, register
+from . import QUERIES, register, work_dir
 from .llm import _NORM, _TOKS, _docs, _stop_sql
 
 #: DuckDB twin of token_ngrams(text, 3) (matches llm.ngram3 oracle).
@@ -125,12 +125,11 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a value-hash-checked driver query, the LLM-pipeline counterpart of
     reactive_ticker_meta_stream."""
     import os
-    import tempfile
 
     from ..sources.registry import table_path
     from ..streaming import await_finished, streaming_dedup_run
 
-    work = tempfile.mkdtemp(prefix="streaming_dedup_")
+    work = work_dir("streaming_dedup_")
     out, ckpt = f"{work}/registry", f"{work}/ckpt"
     src = f"{work}/docs_in"
     os.mkdir(src)
@@ -159,12 +158,11 @@ def streaming_dedup_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/dedup.py:merge_dedup_registry_batch) - per trigger cost
     O(changed keys) instead of complete mode's O(registry)."""
     import os
-    import tempfile
 
     from ..sources.registry import table_path
     from ..streaming import await_finished, streaming_dedup_update_run
 
-    work = tempfile.mkdtemp(prefix="streaming_dedup_upd_")
+    work = work_dir("streaming_dedup_upd_")
     out, ckpt = f"{work}/registry", f"{work}/ckpt"
     src = f"{work}/docs_in"
     os.mkdir(src)
@@ -242,12 +240,11 @@ def corpus_ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the streaming path's row counts, token totals, bin count and
     registry size are all hash-proven, not just pytest-proven."""
     import os
-    import tempfile
 
     from ..sources.registry import table_path
     from ..streaming import await_finished, corpus_ingest_run
 
-    work = tempfile.mkdtemp(prefix="corpus_ingest_")
+    work = work_dir("corpus_ingest_")
     reg, shards, ckpt = f"{work}/registry", f"{work}/shards", f"{work}/ckpt"
     src = f"{work}/docs_in"
     os.mkdir(src)
@@ -386,11 +383,10 @@ def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay/anti-join bug (e.g. re-exporting already-seen content)
     shifts batch 1's chunk/doc/token counts off the oracle's and fails
     the hash."""
-    import tempfile
 
     from ..streaming import await_finished, corpus_ingest_run
 
-    work = tempfile.mkdtemp(prefix="corpus_incr_")
+    work = work_dir("corpus_incr_")
     reg, shards, ckpt = f"{work}/registry", f"{work}/shards", f"{work}/ckpt"
     src = _write_two_waves(read_table(spark, sf_dir, "documents"), work)
     q = corpus_ingest_run(
@@ -457,7 +453,6 @@ def streaming_neardup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth, whose ``n_exact_pairs`` the ORACLE recomputes in DuckDB. A
     broken registry probe, banding, replay guard or verification stage
     flips a boolean or shifts the anchored count and fails the hash."""
-    import tempfile
 
     from ..dedup import simhash_near_pairs
     from ..dedup.ngram import ngram_jaccard_pairs
@@ -467,7 +462,7 @@ def streaming_neardup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_neardup_run,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_neardup_")
+    work = work_dir("stream_neardup_")
     reg, pairs_root, ckpt = f"{work}/registry", f"{work}/pairs", f"{work}/ckpt"
     docs = read_table(spark, sf_dir, "documents")
     src = _write_two_waves(docs, work)

@@ -21,7 +21,7 @@ from ..operators.relational import (
     split_digits,
 )
 from ..sources import read_table
-from . import register
+from . import register, work_dir
 
 
 def _dec_sum(col, precision: int = 38, scale: int = 8):
@@ -402,12 +402,11 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring for the state-size argument at scale.
     """
     import os
-    import tempfile
 
     from ..sources.registry import table_path
     from ..streaming import await_finished, stream_join_run
 
-    work = tempfile.mkdtemp(prefix="stream_join_")
+    work = work_dir("stream_join_")
     out, ckpt = f"{work}/pairs", f"{work}/ckpt"
     src = f"{work}/events_in"
     os.mkdir(src)
@@ -620,12 +619,11 @@ def scd2_stream_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from ..streaming import await_finished
     from ..streaming.scd2 import read_scd2_dim, scd2_stream_run
 
-    work = tempfile.mkdtemp(prefix="scd2_stream_")
+    work = work_dir("scd2_stream_")
     src = f"{work}/events_in"
     os.mkdir(src)
     ev = read_table(spark, sf_dir, "events")
@@ -893,7 +891,6 @@ def upsert_orders_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the materialized table; the oracle recomputes the same result as a
     full-outer coalesce. Inserts, updates, and untouched rows all ride
     the hash."""
-    import tempfile
 
     from ..operators.upsert import read_upserted, upsert_partitioned
 
@@ -908,7 +905,7 @@ def upsert_orders_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * 2).cast("decimal(15,2)").alias("price"),
         F.lit(2).cast("long").alias("ver"),
     )
-    path = tempfile.mkdtemp(prefix="upsert_orders_") + "/t"
+    path = work_dir("upsert_orders_") + "/t"
     upsert_partitioned(spark, path, base, ["o_orderkey"], "ver")
     upsert_partitioned(spark, path, upd, ["o_orderkey"], "ver")
     # integer cents: a decimal column would hash differently purely on
@@ -1471,11 +1468,10 @@ def stream_join_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     import glob
     import os
     import shutil
-    import tempfile
 
     from ..streaming import await_finished, stream_join_outer_run
 
-    work = tempfile.mkdtemp(prefix="stream_join_outer_")
+    work = work_dir("stream_join_outer_")
     out, ckpt = f"{work}/pairs", f"{work}/ckpt"
     src = f"{work}/events_in"
     os.mkdir(src)
@@ -1613,7 +1609,6 @@ def pyds_ticker_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate off the oracle, which regenerates the relation from
     arithmetic alone. ``sf_dir`` is unused: the connector is the data.
     """
-    import tempfile
 
     from ..sources.pyds import register_ticker_feed, register_ticker_store
 
@@ -1625,7 +1620,7 @@ def pyds_ticker_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("days", "250")
         .load()
     )
-    out = tempfile.mkdtemp(prefix="tickerstore_")
+    out = work_dir("tickerstore_")
     feed.write.format("tickerstore").option("path", out).mode("append").save()
     back = spark.read.schema(
         "symbol string, day long, open_cents long, close_cents long, volume long"
@@ -2086,12 +2081,11 @@ def statestore_inspect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (one task per store partition), never a replay of the input.
     """
     import os
-    import tempfile
 
     from ..sources.registry import read_stream, table_path
     from ..streaming import await_finished
 
-    work = tempfile.mkdtemp(prefix="statestore_inspect_")
+    work = work_dir("statestore_inspect_")
     src, ckpt = f"{work}/events_in", f"{work}/ckpt"
     os.mkdir(src)
     os.symlink(table_path(sf_dir, "events"), f"{src}/events.parquet")

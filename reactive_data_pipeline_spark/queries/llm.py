@@ -29,7 +29,8 @@ from ..dedup import (
 )
 from ..functions import text as TX
 from ..operators.relational import ensure_parallelism, top_k
-from ..similarity import knn_brute, knn_lsh
+from ..similarity import knn_brute
+from ..similarity.ivf import IVF_ITERS
 from ..sources import read_table
 from . import register
 
@@ -512,6 +513,93 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
+def _lloyd_sql(seed: str, iters: int) -> str:
+    """Unrolled chained-CTE twin of ``similarity.centroid.lloyd`` (the
+    pagerank_copurchase pattern for iterative ML), ``iters`` rounds from
+    the ``seed`` query's (vec_id, label, embedding) rows. Defines
+    ``lloyd_assign(vec_id, cl, cos)``, the last round's assignment, and
+    ``lloyd_codebook(cl, cvec)``, the codebook it was assigned against.
+    Exactness is by the same two rules every round: centroid component
+    means via e12-scaled integer sums (order-independent), assignments
+    via cosines ROUNDED to 6 decimals with a label-ascending tie-break -
+    so both engines walk the identical centroid trajectory."""
+    ctes = [
+        f"seed AS ({seed})",
+        "comp AS (SELECT vec_id, label, pos, CAST(embedding[pos] AS DOUBLE) AS v"
+        " FROM (SELECT vec_id, label, embedding,"
+        " unnest(generate_series(1, len(embedding))) AS pos FROM seed))",
+        "c0 AS (SELECT label, pos,"
+        " CAST(SUM(CAST(CAST(v AS DECIMAL(20,12)) * 1000000000000 AS BIGINT))"
+        " AS DOUBLE) / (COUNT(*) * 1e12) AS c"
+        " FROM comp GROUP BY label, pos)",
+        "v0 AS (SELECT label AS cl, list(c ORDER BY pos) AS cvec FROM c0 GROUP BY label)",
+    ]
+    for i in range(1, iters + 1):
+        ctes.append(
+            f"s{i} AS (SELECT e.vec_id, c.cl,"
+            f" round({_cos_sql('e.embedding', 'c.cvec')}, 6) AS cos"
+            f" FROM seed e CROSS JOIN v{i - 1} c)"
+        )
+        ctes.append(
+            f"a{i} AS (SELECT vec_id, cl, cos FROM ("
+            f"SELECT vec_id, cl, cos, ROW_NUMBER() OVER"
+            f" (PARTITION BY vec_id ORDER BY cos DESC, cl) AS rn FROM s{i})"
+            f" WHERE rn = 1)"
+        )
+        if i < iters:
+            ctes.append(
+                f"c{i} AS (SELECT a.cl AS label, comp.pos,"
+                f" CAST(SUM(CAST(CAST(comp.v AS DECIMAL(20,12)) * 1000000000000"
+                f" AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e12) AS c"
+                f" FROM comp JOIN a{i} AS a USING (vec_id)"
+                f" GROUP BY a.cl, comp.pos)"
+            )
+            ctes.append(
+                f"v{i} AS (SELECT label AS cl, list(c ORDER BY pos) AS cvec"
+                f" FROM c{i} GROUP BY label)"
+            )
+    ctes.append(f"lloyd_assign AS (SELECT * FROM a{iters})")
+    ctes.append(f"lloyd_codebook AS (SELECT * FROM v{iters - 1})")
+    return ",\n".join(ctes)
+
+
+def _lsh_keys_sql(bands: int, bits: int) -> str:
+    """CTEs ``planes``, ``quant`` and ``keys(id, bk)``: the DuckDB twin of
+    ``dedup.embedding.sign_keys`` over the embeddings table, ``bands`` x
+    ``bits`` md5-derived integer hyperplanes over 64 dims. Plane
+    component c = the sum over j = 0..3 of
+    int(md5('plane:band:bit:i:j')[:5 hex]) minus 2^21, vector component
+    q = floor(double(x) * 2^20), bucket bit ``bit`` set iff the integer
+    dot SUM(q * c) > 0, and bk = band * 2^bits + bucket. Both engines
+    take that dot in float64 (Spark a numpy matmul, DuckDB
+    list_dot_product over DOUBLE[] casts), which is exact in any
+    summation order while max|x| * dim < 4096: |q * c| <= max|x| * 2^41,
+    so every product and partial sum stays below 2^53. DuckDB therefore
+    regenerates the IDENTICAL keys."""
+    return f"""
+    planes AS (
+      SELECT band, bit, list(c ORDER BY i) AS c FROM (
+        SELECT band, bit, i,
+               SUM(CAST(('0x' || substring(md5('plane:' || band || ':' || bit
+                   || ':' || i || ':' || j), 1, 5)) AS BIGINT)) - 2097152 AS c
+        FROM range({bands}) gb(band), range({bits}) gt(bit), range(64) gi(i), range(4) gj(j)
+        GROUP BY band, bit, i
+      ) GROUP BY band, bit
+    ),
+    quant AS (
+      SELECT vec_id AS id,
+             [CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT) FOR x IN embedding] AS q
+      FROM embeddings
+    ),
+    keys AS (
+      SELECT e.id, CAST(p.band AS BIGINT) * {1 << bits}
+               + CAST(SUM(CASE WHEN list_dot_product(CAST(e.q AS DOUBLE[]), CAST(p.c AS DOUBLE[])) > 0
+                          THEN CAST(1 AS BIGINT) << p.bit ELSE 0 END) AS BIGINT) AS bk
+      FROM quant e CROSS JOIN planes p
+      GROUP BY e.id, p.band
+    )"""
+
+
 @register(
     "knn_brute_cosine",
     oracle=f"""
@@ -599,21 +687,15 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_rank_contract(
-    approx: DataFrame,
-    exact: DataFrame,
-    floor10: int,
-    floor5: int,
-    approx_top1: bool,
-) -> DataFrame:
+def _knn_rank_contract(approx: DataFrame, exact: DataFrame) -> DataFrame:
     """Rank-overlap contract between an approximate top-10 and the exact
     brute-force top-10 (both (vec_id, cos_sim round-6), total order cos
-    DESC, vec_id ASC). Emits one row mixing oracle-RECOMPUTABLE
-    identities (exact count/id-sum/top-1) with floor booleans for the
-    engine-specific overlap counts. ``approx_top1=True`` additionally
-    pins the approx method's rank-1 id to the exact top-1 (only for
-    methods where that equality is measured at both check SFs). Every
-    aggregate runs on a <=10-row TakeOrdered result; no windows.
+    DESC, vec_id ASC), one row: the exact leg's count and id checksum,
+    the approximate leg's count and rank-1 (id, cos), and the overlap
+    counts @10 and @5. Every value is recomputed by the oracle
+    (``_knn_contract_sql``); recall floors live in the tests at the
+    check SFs. Every aggregate runs on a <=10-row TakeOrdered result; no
+    windows.
 
     Both inputs are eagerly localCheckpointed first: the contract fans
     each into 3-4 plan branches (stats, top-1, two overlap joins), and
@@ -623,31 +705,29 @@ def _knn_rank_contract(
     approx = approx.localCheckpoint(eager=True)
     exact = exact.localCheckpoint(eager=True)
     order = [F.desc("cos_sim"), F.asc("vec_id")]
-    exact5 = top_k(exact, order, 5)
-    approx5 = top_k(approx, order, 5)
-    top1_src = approx if approx_top1 else exact
     ex_stats = exact.agg(
         F.count(F.lit(1)).cast("long").alias("n_exact"),
         F.sum("vec_id").cast("long").alias("exact_id_sum"),
-        F.max("cos_sim").alias("top1_cos"),
     )
-    t1 = top1_src.agg(
+    ap_stats = approx.agg(
+        F.count(F.lit(1)).cast("long").alias("n_approx"),
         F.max_by(
             "vec_id", F.struct(F.col("cos_sim"), (-F.col("vec_id")).alias("nid"))
         )
         .cast("long")
         .alias("top1_id"),
+        F.max("cos_sim").alias("top1_cos"),
     )
-    n_ap = approx.agg(F.count(F.lit(1)).cast("long").alias("n_approx"))
     h10 = approx.join(exact, "vec_id", "left_semi").agg(
-        F.count(F.lit(1)).alias("__h10")
+        F.count(F.lit(1)).cast("long").alias("overlap10")
     )
-    h5 = approx5.join(exact5, "vec_id", "left_semi").agg(
-        F.count(F.lit(1)).alias("__h5")
+    h5 = (
+        top_k(approx, order, 5)
+        .join(top_k(exact, order, 5), "vec_id", "left_semi")
+        .agg(F.count(F.lit(1)).cast("long").alias("overlap5"))
     )
     return (
-        ex_stats.crossJoin(F.broadcast(t1))
-        .crossJoin(F.broadcast(n_ap))
+        ex_stats.crossJoin(F.broadcast(ap_stats))
         .crossJoin(F.broadcast(h10))
         .crossJoin(F.broadcast(h5))
         .select(
@@ -656,46 +736,55 @@ def _knn_rank_contract(
             "top1_id",
             "top1_cos",
             "n_approx",
-            (F.col("__h10") >= F.lit(floor10)).alias("overlap10_ge_floor"),
-            (F.col("__h5") >= F.lit(floor5)).alias("overlap5_ge_floor"),
+            "overlap10",
+            "overlap5",
         )
     )
 
 
-# FIXTURE COUPLING (ADVICE r6): this oracle hardcodes n_approx=10 and
-# TRUE overlap floors, and the minhash_neardup_pairs/_dedup_groups
-# oracles assume LSH recall EXACTLY 1.0 at the check SFs - all
-# empirical pins MEASURED on the current /root/testdata fixtures
-# (floors: ivf>=5@10, 3@5; lsh>=7@10, 4@5). A regenerated testdata set,
-# changed ANN parameters, or a new check SF must re-measure and update
-# these in the SAME change: run knn_{{ivf,lsh}}_cosine +
-# minhash_recall_contract at both check SFs and transcribe the observed
-# overlaps/recall (deliberate tight gates, not spec bounds).
-_KNN_CONTRACT_SQL = f"""
+def _knn_contract_sql(ctes: str) -> str:
+    """Oracle of :func:`_knn_rank_contract` for query vector 0: ``ctes``
+    defines ``scored(vec_id, cos, hit)`` over every other row, ``hit``
+    marking the rows the approximate method ranks."""
+    return f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    exact AS (
-      SELECT vec_id, round(cos, 6) AS cos_sim FROM (
-        SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos
-        FROM embeddings e, q WHERE e.vec_id <> 0
-      ) ORDER BY cos_sim DESC, vec_id LIMIT 10
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-           CAST(SUM(vec_id) AS BIGINT) AS exact_id_sum,
-           CAST((SELECT vec_id FROM exact
-                 ORDER BY cos_sim DESC, vec_id LIMIT 1) AS BIGINT)
-             AS top1_id,
-           (SELECT cos_sim FROM exact
-            ORDER BY cos_sim DESC, vec_id LIMIT 1) AS top1_cos,
-           CAST(10 AS BIGINT) AS n_approx,
-           TRUE AS overlap10_ge_floor,
-           TRUE AS overlap5_ge_floor
-    FROM exact
+    {ctes},
+    ranked AS (SELECT vec_id, round(cos, 6) AS cos_sim, hit FROM scored),
+    exact AS (SELECT vec_id, cos_sim FROM ranked
+              ORDER BY cos_sim DESC, vec_id LIMIT 10),
+    approx AS (SELECT vec_id, cos_sim FROM ranked WHERE hit
+               ORDER BY cos_sim DESC, vec_id LIMIT 10),
+    exact5 AS (SELECT vec_id FROM exact ORDER BY cos_sim DESC, vec_id LIMIT 5),
+    approx5 AS (SELECT vec_id FROM approx ORDER BY cos_sim DESC, vec_id LIMIT 5)
+    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS n_exact,
+           (SELECT CAST(SUM(vec_id) AS BIGINT) FROM exact) AS exact_id_sum,
+           (SELECT CAST(vec_id AS BIGINT) FROM approx
+            ORDER BY cos_sim DESC, vec_id LIMIT 1) AS top1_id,
+           (SELECT MAX(cos_sim) FROM approx) AS top1_cos,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM approx) AS n_approx,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM approx
+            WHERE vec_id IN (SELECT vec_id FROM exact)) AS overlap10,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM approx5
+            WHERE vec_id IN (SELECT vec_id FROM exact5)) AS overlap5
     """
 
 
 @register(
     "knn_ivf_cosine",
-    oracle=_KNN_CONTRACT_SQL,
+    oracle=_knn_contract_sql(f"""
+    {_lloyd_sql(
+        "SELECT vec_id, CAST(('0x' || substring(md5('cell:' || vec_id), 1, 8))"
+        " AS BIGINT) % 16 AS label, embedding FROM embeddings",
+        IVF_ITERS,
+    )},
+    probe AS (SELECT c.cl FROM lloyd_codebook c, q
+              ORDER BY {_cos_sql('c.cvec', 'q.qv')} DESC, c.cl LIMIT 4),
+    scored AS (
+      SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos,
+             a.cl IN (SELECT cl FROM probe) AS hit
+      FROM embeddings e JOIN lloyd_assign a USING (vec_id), q
+      WHERE e.vec_id <> 0
+    )"""),
     tags=("similarity", "ivf", "contract"),
 )
 def knn_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,53 +792,54 @@ def knn_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 16 cells nearest the query - restated as a rank-overlap contract
     vs the exact brute top-10 (round-6 verdict #2: the raw bucket
     contents were a rows-only check; this form is hash-checked). The
-    quantizer is the DETERMINISTIC decimal-exact Lloyd loop (see
-    similarity/ivf.py - pyspark.ml KMeans centroids varied with
-    partition count, which made this query un-checkable). ``top1_id``
-    here is the EXACT side's rank-1 (IVF misses the true top-1 at
-    sf0.001); floors pin overlap@10 >= 5 and top5-overlap >= 3
-    (measured exactly 5/3-4 at sf0.001 and sf0.01 under local[8] AND
-    local[16]). tests still assert nprobe=n_cells == brute. Both legs
-    come from ONE scoring pass (optimization round 13, guide section
-    2.4, like knn_lsh_cosine): ``knn_ivf_and_brute`` checkpoints the
-    (id, cos, cell) relation once - leg-identical to knn_ivf/knn_brute
-    (test-pinned)."""
+    quantizer is the DETERMINISTIC decimal-exact Lloyd loop seeded by
+    ``md5('cell:' || vec_id)`` (similarity/ivf.py), so the oracle
+    recomputes its 2 rounds, the probe cells (unrounded centroid cosine
+    descending, then cell ascending) and the approximate top-10. No
+    recall floor: on this uniform-sphere corpus the IVF overlaps are
+    seed luck (ENGINEERING.md records them per SF). Both legs come from
+    ONE scoring pass: ``knn_ivf_and_brute`` checkpoints the (id, cos,
+    cell) relation once."""
     from ..similarity import knn_ivf_and_brute
 
     emb = _emb(spark, sf_dir)
     approx, exact = knn_ivf_and_brute(emb, query_id=0, k=10, n_cells=16, nprobe=4)
-    return _knn_rank_contract(approx, exact, floor10=5, floor5=3, approx_top1=False)
+    return _knn_rank_contract(approx, exact)
 
 
 @register(
     "knn_lsh_cosine",
-    oracle=_KNN_CONTRACT_SQL,
+    oracle=_knn_contract_sql(f"""
+    {_lsh_keys_sql(1, 4)},
+    scored AS (
+      SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos,
+             bit_count(xor(k.bk, qk.bk)) <= 2 AS hit
+      FROM embeddings e JOIN keys k ON k.id = e.vec_id,
+           q, (SELECT bk FROM keys WHERE id = 0) qk
+      WHERE e.vec_id <> 0
+    )"""),
     tags=("similarity", "lsh", "contract"),
     bench=True,
 )
 def knn_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-10 (bucket + multi-probe; few
-    planes + radius-2 probing because this corpus's neighbors are weak,
-    cosine <= ~0.5), restated as a rank-overlap contract vs the exact
-    brute top-10 (round-6 verdict #2). ``top1_id`` is the LSH method's
-    OWN rank-1 result, pinned to the exact top-1 (measured equal at both
-    check SFs - sign-LSH buckets preserve the strongest neighbor);
-    floors pin overlap@10 >= 7 and top5-overlap >= 4 (measured exactly
-    those at sf0.001 and sf0.01). Still benched: the timed work is the
-    LSH path plus the O(N) brute twin - the plan you run when
-    validating an ANN index build. Both legs come from ONE scan
-    (optimization round 13, guide section 2.4): the fused
-    ``knn_lsh_and_brute`` scores each row once with the exact cosine
-    plus the bucket-match flag and both top-ks read the checkpointed
-    narrow relation - leg-identical to knn_lsh/knn_brute (test-pinned),
-    half the corpus scans/eager executions."""
+    """Sign-LSH approximate top-10 (one band of 4 md5 integer planes,
+    radius-2 multi-probe: few planes + wide probing because this corpus's
+    neighbors are weak, cosine <= ~0.5), restated as a rank-overlap
+    contract vs the exact brute top-10 (round-6 verdict #2). The buckets
+    are ``dedup.embedding.sign_keys``, exact integer arithmetic, so the
+    oracle recomputes every bucket and the approximate top-10; recall
+    floors (overlap@10 >= 7, @5 >= 4) are tests at the check SFs. Still
+    benched: the timed work is the LSH path plus the O(N) brute twin -
+    the plan you run when validating an ANN index build. Both legs come
+    from ONE Arrow pass (``knn_lsh_and_brute``): each row's exact cosine
+    and bucket-match flag, checkpointed once, both top-ks reading it."""
     from ..similarity import knn_lsh_and_brute
 
     emb = _emb(spark, sf_dir)
     approx, exact = knn_lsh_and_brute(
         emb, query_id=0, k=10, num_planes=4, probe_radius=2
     )
-    return _knn_rank_contract(approx, exact, floor10=7, floor5=4, approx_top1=True)
+    return _knn_rank_contract(approx, exact)
 
 
 @register(
@@ -773,45 +863,10 @@ def embedding_neardup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_neardup_pairs(_emb(spark, sf_dir), threshold=0.45)
 
 
-# Sign-LSH band keys under md5-derived integer hyperplanes
-# (dedup/embedding.py md5_planes / band_keys), 32 bands x 8 bits
-# over 64 dims: plane component c = the sum over j = 0..3 of
-# int(md5('plane:band:bit:i:j')[:5 hex]) minus 2^21, vector component
-# q = floor(double(x) * 2^20), and bucket bit ``bit`` is set iff the
-# integer dot SUM(q * c) > 0. Both engines take that dot in float64
-# (Spark a numpy matmul, DuckDB list_dot_product over DOUBLE[] casts),
-# which is exact in any summation order while max|x| * dim < 4096:
-# |q * c| <= max|x| * 2^41, so every product and partial sum stays
-# below 2^53. DuckDB therefore regenerates the IDENTICAL keys, banded
-# candidate set, and verified cosines.
-_LSH_KEYS = """
-    planes AS (
-      SELECT band, bit, list(c ORDER BY i) AS c FROM (
-        SELECT band, bit, i,
-               SUM(CAST(('0x' || substring(md5('plane:' || band || ':' || bit
-                   || ':' || i || ':' || j), 1, 5)) AS BIGINT)) - 2097152 AS c
-        FROM range(32) gb(band), range(8) gt(bit), range(64) gi(i), range(4) gj(j)
-        GROUP BY band, bit, i
-      ) GROUP BY band, bit
-    ),
-    quant AS (
-      SELECT vec_id AS id,
-             [CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT) FOR x IN embedding] AS q
-      FROM embeddings
-    ),
-    keys AS (
-      SELECT e.id, CAST(p.band AS BIGINT) * 256
-               + CAST(SUM(CASE WHEN list_dot_product(CAST(e.q AS DOUBLE[]), CAST(p.c AS DOUBLE[])) > 0
-                          THEN CAST(1 AS BIGINT) << p.bit ELSE 0 END) AS BIGINT) AS bk
-      FROM quant e CROSS JOIN planes p
-      GROUP BY e.id, p.band
-    )"""
-
-
 @register(
     "embedding_neardup_lsh",
     oracle=f"""
-    WITH {_LSH_KEYS},
+    WITH {_lsh_keys_sql(32, 8)},
     filt AS (SELECT id, bk FROM keys QUALIFY count(*) OVER (PARTITION BY bk) <= 64),
     cand AS (SELECT DISTINCT a.id AS vec_a, b.id AS vec_b
              FROM filt a JOIN filt b ON a.bk = b.bk AND a.id < b.id)
@@ -1485,75 +1540,6 @@ def minhash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ann_recall_contract",
-    oracle=f"""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    exact AS (
-      SELECT vec_id, round(cos, 6) AS cos_sim FROM (
-        SELECT e.vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos
-        FROM embeddings e, q WHERE e.vec_id <> 0
-      ) ORDER BY cos_sim DESC, vec_id LIMIT 10
-    ),
-    stats AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-             CAST(SUM(vec_id) AS BIGINT) AS exact_id_sum
-      FROM exact
-    )
-    SELECT 'ivf' AS method, n_exact, exact_id_sum,
-           10 AS n_results, TRUE AS meets_recall_floor FROM stats
-    UNION ALL
-    SELECT 'lsh', n_exact, exact_id_sum, 10, TRUE FROM stats
-    """,
-    tags=("similarity", "lsh", "ivf", "contract"),
-)
-def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The approximate-similarity quality gate as a HASH-CHECKED query
-    (the sketch-family tolerance-contract pattern): run brute-force
-    exact top-10 and both ANN scale paths for the same query vector,
-    and emit each method's result count plus recall >= 0.5 against the
-    exact set (floor lowered 6 -> 5 in round 6: the deterministic
-    decimal-exact IVF quantizer - reproducible under any partitioning,
-    unlike the pyspark.ml KMeans it replaced - lands overlap@10 = 5 at
-    sf0.001; knn_ivf_cosine/knn_lsh_cosine pin the tighter per-method
-    floors). The ORACLE independently recomputes the exact top-10 by
-    brute-force cosine in DuckDB and derives ``n_exact`` and
-    ``exact_id_sum`` (the checksum of the exact neighbor ids) from it -
-    so a broken exact-side baseline shifts the Spark checksum off the
-    oracle's and fails the hash, unlike a same-engine recall ratio.
-    The raw approximate neighbor lists are engine-hash-specific (hence
-    the twins' rows-only checks); the recall booleans stay Spark-side."""
-    from ..similarity import knn_ivf, knn_lsh
-
-    emb = _emb(spark, sf_dir)
-    exact = knn_brute(emb, query_id=0, k=10).select("vec_id")
-    exact_stats = exact.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.sum("vec_id").alias("exact_id_sum"),
-    )
-    ivf = knn_ivf(emb, query_id=0, k=10, n_cells=16, nprobe=4).select("vec_id")
-    lsh = knn_lsh(emb, query_id=0, k=10, num_planes=4, probe_radius=2).select("vec_id")
-
-    def contract(method: str, approx: DataFrame) -> DataFrame:
-        hits = approx.join(exact, "vec_id", "left_semi").agg(
-            F.count(F.lit(1)).alias("__hits")
-        )
-        n = approx.agg(F.count(F.lit(1)).alias("__n"))
-        return (
-            hits.crossJoin(F.broadcast(n))
-            .crossJoin(F.broadcast(exact_stats))
-            .select(
-                F.lit(method).alias("method"),
-                "n_exact",
-                "exact_id_sum",
-                F.col("__n").cast("int").alias("n_results"),
-                (F.col("__hits") >= F.lit(5)).alias("meets_recall_floor"),
-            )
-        )
-
-    return contract("ivf", ivf).unionByName(contract("lsh", lsh))
-
-
-@register(
     "minhash_recall_contract",
     oracle=f"""
     WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
@@ -1578,7 +1564,7 @@ def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash+LSH dedup quality gate as a hash-checked query (the
-    ann_recall_contract pattern for the text path): run the banded LSH
+    knn contracts' pattern for the text path): run the banded LSH
     pipeline AND the exact trigram-Jaccard ground truth, emit the exact
     pair count (oracle-recomputable!) plus zero-false-positive and
     recall >= 0.8 booleans. Measured recall with these seeds is 1.0 at
@@ -1610,29 +1596,38 @@ def minhash_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_recall_contract",
     oracle=f"""
-    WITH pairs AS (
+    WITH {_lsh_keys_sql(32, 8)},
+    pairs AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
              {_cos_sql('a.embedding', 'b.embedding')} AS cos
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     ),
-    exact AS (SELECT vec_a, vec_b FROM pairs WHERE cos >= 0.5)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
-           CAST(COALESCE(SUM(vec_a + vec_b), 0) AS BIGINT) AS exact_pair_id_sum,
-           TRUE AS no_false_positives,
-           TRUE AS meets_recall_floor
-    FROM exact
+    exact AS (SELECT vec_a, vec_b FROM pairs WHERE cos >= 0.5),
+    cand AS (SELECT DISTINCT a.id AS vec_a, b.id AS vec_b
+             FROM keys a JOIN keys b ON a.bk = b.bk AND a.id < b.id),
+    lsh AS (SELECT vec_a, vec_b FROM cand JOIN pairs USING (vec_a, vec_b)
+            WHERE cos >= 0.5)
+    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS n_exact_pairs,
+           (SELECT CAST(COALESCE(SUM(vec_a + vec_b), 0) AS BIGINT) FROM exact)
+             AS exact_pair_id_sum,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM lsh) AS n_lsh_pairs,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM lsh
+            SEMI JOIN exact USING (vec_a, vec_b)) AS lsh_hits
     """,
     tags=("dedup", "similarity", "lsh", "contract"),
 )
 def embedding_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sign-LSH embedding near-dup quality gate as a hash-checked
     query (minhash_recall_contract's pattern for the dense-vector path):
-    run the banded sign-LSH pipeline AND the all-pairs exact ground
-    truth at the same threshold, emit the exact pair count and an
-    id-sum checksum of the exact pair set (both ORACLE-recomputed by
-    DuckDB's own all-pairs cosine) plus zero-false-positive and
-    recall-floor booleans. The O(N^2) exact twin runs here as sf-scale
-    ground truth only - the bench headlines the linear LSH path."""
+    run the banded sign-LSH pipeline (32 bands x 8 bits, uncapped) AND
+    the all-pairs exact ground truth at the same threshold, and emit the
+    exact pair count, an id-sum checksum of the exact pair set, the LSH
+    pair count and how many LSH pairs are exact pairs. The oracle
+    recomputes all four: the band keys are exact integer arithmetic
+    (``dedup.embedding.sign_keys``). The floors (no false positives,
+    recall >= 0.7) are tests at the check SFs. The O(N^2) exact twin
+    runs here as sf-scale ground truth only - the bench headlines the
+    linear LSH path."""
     emb = _emb(spark, sf_dir)
     exact = embedding_neardup_pairs(emb, threshold=0.5).select("vec_a", "vec_b")
     lsh = embedding_neardup_lsh(emb, threshold=0.5).select("vec_a", "vec_b")
@@ -1642,21 +1637,14 @@ def embedding_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("exact_pair_id_sum"),
     )
-    n_lsh = lsh.agg(F.count(F.lit(1)).alias("__n_lsh"))
+    n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh_pairs"))
     hits = lsh.join(exact, ["vec_a", "vec_b"], "left_semi").agg(
-        F.count(F.lit(1)).alias("__hits")
+        F.count(F.lit(1)).alias("lsh_hits")
     )
     return (
         n_exact.crossJoin(F.broadcast(n_lsh))
         .crossJoin(F.broadcast(hits))
-        .select(
-            "n_exact_pairs",
-            "exact_pair_id_sum",
-            (F.col("__hits") == F.col("__n_lsh")).alias("no_false_positives"),
-            (
-                F.col("__hits") >= F.lit(0.7) * F.col("n_exact_pairs")
-            ).alias("meets_recall_floor"),
-        )
+        .select("n_exact_pairs", "exact_pair_id_sum", "n_lsh_pairs", "lsh_hits")
     )
 
 

@@ -21,11 +21,10 @@ from pyspark.sql import functions as F
 from ..functions.bloom import bloom_build, bloom_might_contain
 from ..functions.curation import stratified_keep
 from ..operators.cogroup import asof_join_cogroup
-from ..operators.relational import free_local_checkpoint
-from ..similarity.centroid import label_centroids, nearest_centroid
+from ..similarity.centroid import label_centroids, lloyd, nearest_centroid
 from ..sources import read_table
 from . import register
-from .llm import _cos_sql, _emb
+from .llm import _cos_sql, _emb, _lloyd_sql
 
 # ---------------------------------------------------------------------------
 # Nearest-centroid assignment (classification / cluster routing)
@@ -437,59 +436,15 @@ def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_ITERS = 3
 
 
-def _kmeans_oracle(iters: int) -> str:
-    """Unrolled chained-CTE twin of the Spark Lloyd loop (the
-    pagerank_copurchase pattern for iterative ML). Exactness is by the
-    same two rules every iteration: centroid component means via
-    decimal(38,12) sums (order-independent), assignments via cosines
-    ROUNDED to 6 decimals with a label-ascending tie-break - so both
-    engines walk the identical centroid trajectory."""
-    ctes = [
-        "comp AS (SELECT vec_id, label, pos, CAST(embedding[pos] AS DOUBLE) AS v"
-        " FROM (SELECT vec_id, label, embedding,"
-        " unnest(generate_series(1, len(embedding))) AS pos FROM embeddings))",
-        "c0 AS (SELECT label, pos,"
-        " CAST(SUM(CAST(CAST(v AS DECIMAL(20,12)) * 1000000000000 AS BIGINT))"
-        " AS DOUBLE) / (COUNT(*) * 1e12) AS c"
-        " FROM comp GROUP BY label, pos)",
-        "v0 AS (SELECT label AS cl, list(c ORDER BY pos) AS cvec FROM c0 GROUP BY label)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"s{i} AS (SELECT e.vec_id, c.cl,"
-            f" round({_cos_sql('e.embedding', 'c.cvec')}, 6) AS cos"
-            f" FROM embeddings e CROSS JOIN v{i - 1} c)"
-        )
-        ctes.append(
-            f"a{i} AS (SELECT vec_id, cl, cos FROM ("
-            f"SELECT vec_id, cl, cos, ROW_NUMBER() OVER"
-            f" (PARTITION BY vec_id ORDER BY cos DESC, cl) AS rn FROM s{i})"
-            f" WHERE rn = 1)"
-        )
-        if i < iters:
-            ctes.append(
-                f"c{i} AS (SELECT a.cl AS label, comp.pos,"
-                f" CAST(SUM(CAST(CAST(comp.v AS DECIMAL(20,12)) * 1000000000000"
-                f" AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e12) AS c"
-                f" FROM comp JOIN a{i} AS a USING (vec_id)"
-                f" GROUP BY a.cl, comp.pos)"
-            )
-            ctes.append(
-                f"v{i} AS (SELECT label AS cl, list(c ORDER BY pos) AS cvec"
-                f" FROM c{i} GROUP BY label)"
-            )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT cl AS cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,"
-        f" CAST(SUM(CAST(CAST(cos AS DECIMAL(10,6)) * 1000000 AS BIGINT)) AS BIGINT)"
-        f" AS sum_cos_e6 FROM a{iters} GROUP BY cl"
-    )
-
-
 @register(
     "kmeans_embedding_clusters",
-    oracle=_kmeans_oracle(_KM_ITERS),
+    oracle=f"""
+    WITH {_lloyd_sql("SELECT vec_id, label, embedding FROM embeddings", _KM_ITERS)}
+    SELECT cl AS cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           CAST(SUM(CAST(CAST(cos AS DECIMAL(10,6)) * 1000000 AS BIGINT)) AS BIGINT)
+             AS sum_cos_e6
+    FROM lloyd_assign GROUP BY cl
+    """,
     tags=("similarity", "clustering", "iterative"),
 )
 def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,34 +460,19 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity/centroid.py);
     (2) assignment - cosines round to 6 decimals before the argmax and
     ties break toward the smaller cluster id. Identical rules in the
-    unrolled DuckDB CTE chain, so both engines walk the same centroid
-    trajectory; empty clusters drop out identically on both sides.
+    unrolled DuckDB CTE chain (``_lloyd_sql``), so both engines walk the
+    same centroid trajectory; empty clusters drop out identically on
+    both sides. The loop is ``similarity.centroid.lloyd``, the same one
+    IVF's coarse quantizer runs.
 
     Scale shape per iteration (similarity/centroid.py): broadcast the
     codebook, score map-side, min_by partial-agg argmax (one exchange
     keyed vec_id), then one (cluster, pos) exchange of partial sums
-    bounded by k x dim x partitions. Centroids localCheckpoint each
-    round - the fixed-size state truncates the iterative lineage.
+    bounded by k x dim x partitions. Each codebook is localCheckpointed
+    and the previous one freed - the fixed-size state truncates the
+    iterative lineage.
     """
-    emb = _emb(spark, sf_dir)
-    cents = label_centroids(emb)
-    assigned = None
-    prev_ck = None
-    for i in range(1, _KM_ITERS + 1):
-        assigned = nearest_centroid(emb, cents)
-        if i < _KM_ITERS:
-            relabeled = emb.drop("label").join(
-                assigned.select("vec_id", F.col("assigned_label").alias("label")),
-                "vec_id",
-            ).select("label", "embedding")
-            cents = label_centroids(relabeled).localCheckpoint(eager=True)
-            # rotate: the previous round's centroid checkpoint fed this
-            # one and is dead now (round-10 session-drag fix - keep the
-            # loop at O(1) pinned blocks). The LAST checkpoint stays:
-            # the returned aggregation reads through `assigned`.
-            if prev_ck is not None:
-                free_local_checkpoint(prev_ck)
-            prev_ck = cents
+    assigned, _ = lloyd(_emb(spark, sf_dir), F.col("label"), _KM_ITERS)
     return assigned.groupBy(F.col("assigned_label").alias("cluster")).agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum(

@@ -166,8 +166,8 @@ def retrieve_rerank_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval under the value hash: coarse candidate
     generation (the query's nearest-centroid CELL - IVF with nprobe=1
     over the decimal-exact label centroids, so BOTH stages are
-    oracle-reproducible, unlike random-plane LSH whose quality is
-    gated by ``ann_recall_contract`` instead) followed by an exact
+    oracle-reproducible, like the md5-planed LSH and md5-seeded IVF
+    legs of ``knn_lsh_cosine`` / ``knn_ivf_cosine``) followed by an exact
     cosine re-rank, top-5 per query for the whole query batch (every
     100th vector). This is the retrieve->rerank shape every RAG /
     hard-example-mining pipeline runs; ``knn_batch_cosine`` is its
@@ -181,8 +181,8 @@ def retrieve_rerank_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     own cell), and the only exchange after scoring is the query-keyed
     ranking, carrying O(candidates-in-cell) rows, never the score
     matrix. At 100 TB: raise k so cells stay bounded, nprobe > 1 for
-    recall (then the oracle becomes a recall contract like
-    ``ann_recall_contract``).
+    recall (then the oracle becomes a rank-overlap contract like
+    ``knn_ivf_cosine``).
     """
     emb = _emb(spark, sf_dir)
     assigned = nearest_centroid(emb, label_centroids(emb))

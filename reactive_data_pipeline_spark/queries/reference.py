@@ -15,7 +15,7 @@ from ..functions.datetime_ops import bangkok_day
 from ..operators import ticker as tk
 from ..operators.relational import exact_sum
 from ..sources import read_table
-from . import register
+from . import register, work_dir
 
 #: DuckDB twin of operators.ticker.derive_ticker - the deterministic
 #: events -> Ticker projection (FIXTURES.md section 3).
@@ -189,12 +189,11 @@ def reactive_ticker_meta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant as a value-hash-checked driver query rather than only a
     pytest assertion."""
     import os
-    import tempfile
 
     from ..sources.registry import table_path
     from ..streaming import await_finished, reactive_ticker_meta_run, read_ticker_meta
 
-    work = tempfile.mkdtemp(prefix="reactive_ticker_meta_")
+    work = work_dir("reactive_ticker_meta_")
     out, ckpt = f"{work}/ticker_meta", f"{work}/ckpt"
     # The file-stream source watches a directory; expose the single
     # driver file through one (no copy).

@@ -41,7 +41,12 @@ Scale notes (targeting a multi-executor cluster even though we test on
   by ``tests/test_engine_assumptions.py``, assumption 5).
   Workers already import this package to unpickle the engine's pandas
   UDFs, so this adds no import requirement: the package must be
-  importable by the executors' Python at daemon start.
+  importable by the executors' Python at daemon start. The daemon starts
+  with ``python -m`` before any ``addPyFile`` path reaches ``sys.path``,
+  so local sessions put the package's parent directory on the workers'
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), which makes them
+  independent of the working directory. On a cluster master the package
+  must be installed on every executor (ENGINEERING.md).
 * Local sessions read and write ``file:`` paths through
   :mod:`reactive_data_pipeline_spark.jvm`'s Hadoop filesystems
   (``fs.file.impl`` and ``fs.AbstractFileSystem.file.impl``, classes on
@@ -68,6 +73,9 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from . import jvm
+
+#: The directory holding this package, on local workers' PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Engine-wide defaults; applied by :func:`get_spark`.
 ENGINE_CONF: dict[str, str] = {
@@ -140,6 +148,11 @@ def get_spark(
         )
     if extra_conf:
         conf.update(extra_conf)
+    if master and master.startswith("local"):
+        # Same host: the workers import the package from where the
+        # driver did.
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(filter(None, [conf.get(key), _PACKAGE_PARENT]))
     if master and (master == "local" or master.startswith("local[")):
         # One JVM: the driver's class path is the executors'.
         _use_fork_free_fs(conf)

@@ -28,10 +28,11 @@ decimal-exact centroids and the same rounded argmax).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from ..operators.relational import free_local_checkpoint
 
 
 def label_centroids(
@@ -103,3 +104,44 @@ def nearest_centroid(
     return best.select(
         id_col, "true_label", "__best.assigned_label", "__best.cos_sim"
     )
+
+
+def lloyd(
+    emb: DataFrame,
+    labels: Column,
+    iters: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` rounds of cosine k-means (Lloyd's algorithm) seeded by
+    the per-row ``labels`` expression: centroids of the current labels
+    (:func:`label_centroids`), then every row of ``emb`` reassigned to
+    its nearest centroid (:func:`nearest_centroid`).
+
+    Returns (assignment, codebook): the last round's (id_col,
+    true_label = seed label, assigned_label, cos_sim) and the (label,
+    centroid) codebook it was assigned against. Empty clusters drop out
+    of the next codebook.
+
+    Each updated codebook is an eager ``localCheckpoint`` (a tiny,
+    fixed-size state that truncates the iterative lineage; the seed
+    codebook is computed once, inside the first update's job), and each
+    round assigns ``emb`` itself rather than the previous round's
+    labelled rows, so only the newest codebook is live: the one before
+    it is freed as soon as the next has materialized. The DuckDB twin is
+    ``queries.llm._lloyd_sql``."""
+    seeded = emb.select(id_col, vec_col, labels.alias("__seed"))
+    cents = label_centroids(seeded, label_col="__seed", vec_col=vec_col)
+    for i in range(1, iters + 1):
+        assigned = nearest_centroid(
+            seeded, cents, id_col=id_col, label_col="__seed", vec_col=vec_col
+        )
+        if i < iters:
+            relabeled = seeded.join(assigned.select(id_col, "assigned_label"), id_col)
+            prev = cents
+            cents = label_centroids(
+                relabeled, label_col="assigned_label", vec_col=vec_col
+            ).localCheckpoint(eager=True)
+            if i > 1:
+                free_local_checkpoint(prev)
+    return assigned, cents

@@ -7,38 +7,50 @@ to its nearest centroid; a query scores only the vectors in the
 ``nprobe = n_cells`` degenerates to exact brute force, ``nprobe = 1``
 scans ~1/n_cells of the table.
 
-Spark shape: the quantizer is the repo's own DETERMINISTIC Lloyd loop
-(similarity/centroid.py: decimal-exact e12-integer component sums for
-the update step, round-6 cosines with a label-ascending tie-break for
-the assignment step), seeded by hashing ids into ``n_cells`` buckets.
-Round-6 lesson: ``pyspark.ml.clustering.KMeans`` aggregates float
-partial sums whose result depends on partition count, so the SAME seed
-gave different centroids under local[8] vs local[16] - an index build
-that isn't reproducible across cluster layouts can't be oracle-checked
-(and at 100 TB means two runs of the same job disagree). The decimal
-loop is order-independent under any partitioning. Assignment and probe
-are fully declarative - query row and centroid table are broadcast,
-cell selection is a top-k over n_cells rows, candidates come from an
-equi join on the cell id - so nothing but the tiny codebook is
-collected and the whole search is one partition-prunable plan. Writing
-the assigned table ``partitionBy('ivf_cell')`` turns the probe into a
-pruned file scan, which is the deployment layout at scale.
+Spark shape: the quantizer is the repo's one DETERMINISTIC Lloyd loop
+(``similarity.centroid.lloyd``: decimal-exact e12-integer component sums
+for the update step, round-6 cosines with a label-ascending tie-break
+for the assignment step), seeded by an md5 hash of each id into
+``n_cells`` cells. Round-6 lesson: ``pyspark.ml.clustering.KMeans``
+aggregates float partial sums whose result depends on partition count,
+so the SAME seed gave different centroids under local[8] vs local[16] -
+an index build that isn't reproducible across cluster layouts can't be
+oracle-checked (and at 100 TB means two runs of the same job disagree).
+The decimal loop is order-independent under any partitioning, and md5 is
+the one hash DuckDB computes identically, so the oracle
+(``queries.llm.knn_ivf_cosine``) recomputes every cell, the probe cells
+and the approximate top-k. Assignment and probe are fully declarative -
+query row and centroid table are broadcast, cell selection is a top-k
+over n_cells rows, candidates come from an equi join on the cell id - so
+nothing but the tiny codebook is collected. Writing the assigned table
+``partitionBy('ivf_cell')`` turns the probe into a pruned file scan,
+which is the deployment layout at scale.
 
 Approximate by construction; the exact baseline is
 similarity.brute.knn_brute (tests assert exact equality at
-nprobe = n_cells), and the catalog entry knn_ivf_cosine pins a
-rank-overlap contract against it.
+nprobe = n_cells).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
 from ..operators.relational import ensure_parallelism, top_k
+from .centroid import lloyd
 
-DEFAULT_SEED = 42
+#: Lloyd rounds of the coarse quantizer.
+IVF_ITERS = 2
+
+
+def cell_seed(id_col: str, n_cells: int) -> Column:
+    """Seed cell ``pmod(int(md5('cell:' || id)[:8 hex]), n_cells)``; md5
+    keeps it recomputable in DuckDB (the ``plane:...`` tag convention of
+    ``dedup.embedding.md5_planes``)."""
+    tag = F.concat(F.lit("cell:"), F.col(id_col).cast("string"))
+    h = F.conv(F.substring(F.md5(tag), 1, 8), 16, 10)
+    return F.pmod(h.cast("long"), F.lit(n_cells)).cast("int")
 
 
 def ivf_assign(
@@ -46,78 +58,25 @@ def ivf_assign(
     n_cells: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = DEFAULT_SEED,
-    iters: int = 2,
-    fit_mod: int | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Fit the coarse quantizer and assign every row to a cell.
 
-    Returns (table + ``ivf_cell`` column, [(cell, centroid), ...]).
-    The centroid list is tiny (<= n_cells x dim) and becomes a
-    broadcast literal table in the probe plan; cells that empty out
-    during Lloyd iterations drop from it (ids stay sparse-but-stable).
-
-    Each iteration: decimal-exact per-cell component means (one bounded
-    posexplode shuffle), broadcast-codebook argmax re-assignment (one
-    map-combined min_by exchange), join back. ``localCheckpoint`` after
-    each update truncates the iterative lineage - fixed-size state, the
-    same shape as kmeans_embedding_clusters.
-
-    ``fit_mod``: the at-scale knob. At 100 TB nobody runs Lloyd over
-    the full corpus - the quantizer is fit on a sample and only the
-    final ASSIGNMENT pass touches every row. ``fit_mod=m`` fits on the
-    deterministic 1/m hash-slice ``xxhash64(id, seed+1) % m == 0``
-    (reproducible under any partitioning, unlike ``DataFrame.sample``),
-    cutting the iterative posexplode/argmax cost by ~m while the full
-    table still gets exactly one broadcast-codebook assignment. Default
-    ``None`` fits on everything (the small-corpus / catalog behavior,
-    bit-for-bit unchanged).
-    """
-    from .centroid import label_centroids, nearest_centroid
-
+    Returns (table + ``ivf_cell`` column, [(cell, centroid), ...]): the
+    cells of the last of ``IVF_ITERS`` Lloyd rounds and the codebook they
+    were assigned against. The centroid list is tiny (<= n_cells x dim)
+    and becomes a broadcast literal table in the probe plan; cells that
+    empty out during Lloyd rounds drop from it (ids stay
+    sparse-but-stable)."""
     emb = ensure_parallelism(emb)
-    fit = (
-        emb
-        if fit_mod is None
-        else emb.filter(
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed + 1)), F.lit(fit_mod)) == 0
-        )
-    )
-    cells = fit.withColumn(
-        "__cell",
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_cells)).cast("int"),
-    )
-    cents = None
-    for _ in range(max(1, iters)):
-        # NOT rotated (round-10): `cells` is never checkpointed, so its
-        # lazy lineage chains through EVERY prior codebook checkpoint -
-        # freeing one would break recomputation. The codebooks are
-        # <= n_cells rows each; O(iters) of them is noise, unlike the
-        # edge-scale loops (kcore/components/pagerank) that do rotate.
-        cents = label_centroids(cells, label_col="__cell", vec_col=vec_col).localCheckpoint(
-            eager=True
-        )
-        assigned = nearest_centroid(
-            cells, cents, id_col=id_col, label_col="__cell", vec_col=vec_col
-        )
-        cells = fit.join(
-            assigned.select(id_col, F.col("assigned_label").alias("__cell")), id_col
-        )
-    if fit_mod is not None:
-        # One full-table assignment against the fitted codebook (the
-        # loop above only ever touched the fit slice).
-        full = emb.withColumn("__cell", F.lit(0))
-        fa = nearest_centroid(
-            full, cents, id_col=id_col, label_col="__cell", vec_col=vec_col
-        )
-        cells = emb.join(
-            fa.select(id_col, F.col("assigned_label").alias("__cell")), id_col
-        )
+    assigned, cents = lloyd(emb, cell_seed(id_col, n_cells), IVF_ITERS, id_col, vec_col)
     centers = [
         (int(r["label"]), [float(x) for x in r["centroid"]])
         for r in cents.orderBy("label").collect()
     ]
-    return cells.withColumnRenamed("__cell", "ivf_cell"), centers
+    cells = emb.join(
+        assigned.select(id_col, F.col("assigned_label").alias("ivf_cell")), id_col
+    )
+    return cells, centers
 
 
 def knn_ivf_and_brute(
@@ -128,28 +87,25 @@ def knn_ivf_and_brute(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
 ) -> tuple[DataFrame, DataFrame]:
-    """(approx, exact) top-k in ONE scoring pass (optimization round
-    13, guide section 2.4, mirroring ``lsh.knn_lsh_and_brute``): the
-    assigned table is scored once with the exact cosine (what the brute
-    yardstick computes anyway), the narrow (id, cos, cell) relation is
-    checkpointed, and the approx leg is a broadcast cell semi-join over
-    it instead of a second scan. The query vector comes straight from
-    ``emb`` rather than the assigned table - its cell is never used, and
-    reading it through the assignment join re-ran the whole Lloyd
-    join-back per consumer. Legs are row-identical to knn_ivf/knn_brute
-    (same cosine expression, same probe cells, same total order;
-    test-pinned)."""
-    from ..operators.relational import top_k as _top_k
+    """(approx, exact) top-k cosine neighbors of ``query_id`` (excluded
+    from both), each (vec_id, cos_sim rounded to 6 dp) in the total order
+    cos_sim desc, vec_id asc. ``approx`` ranks only the rows of the
+    ``nprobe`` cells whose centroids have the highest (unrounded) cosine
+    to the query, cell id ascending on ties; ``exact`` ranks every row
+    (the brute-force yardstick, equal to ``knn_brute``).
 
-    assigned, centers = ivf_assign(
-        emb, n_cells=n_cells, vec_col=vec_col, id_col=id_col, seed=seed
-    )
+    ONE scoring pass: the assigned table is scored once with the exact
+    cosine, the narrow (id, cos, cell) relation is checkpointed, and the
+    approx leg is a broadcast cell semi-join over it instead of a second
+    scan. The query vector comes straight from ``emb`` rather than the
+    assigned table - its cell is never used, and reading it through the
+    assignment join re-ran the whole Lloyd join-back per consumer."""
+    assigned, centers = ivf_assign(emb, n_cells=n_cells, vec_col=vec_col, id_col=id_col)
     spark = emb.sparkSession
     cent = spark.createDataFrame(centers, "ivf_cell int, center array<double>")
     q = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    probe_cells = _top_k(
+    probe_cells = top_k(
         cent.crossJoin(F.broadcast(q)).select(
             "ivf_cell", cosine("center", "__q").alias("__d")
         ),
@@ -167,49 +123,10 @@ def knn_ivf_and_brute(
         .localCheckpoint(eager=True)
     )
     order = [F.desc("cos_sim"), F.asc("vec_id")]
-    approx = _top_k(
+    approx = top_k(
         scored.join(F.broadcast(probe_cells), "ivf_cell").select("vec_id", "cos_sim"),
         order,
         k,
     )
-    exact = _top_k(scored.select("vec_id", "cos_sim"), order, k)
+    exact = top_k(scored.select("vec_id", "cos_sim"), order, k)
     return approx, exact
-
-
-def knn_ivf(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Approximate top-k cosine neighbors of ``query_id`` scanning only
-    ``nprobe`` of ``n_cells`` inverted lists. Columns: vec_id, cos_sim
-    (same schema as knn_brute)."""
-    assigned, centers = ivf_assign(
-        emb, n_cells=n_cells, vec_col=vec_col, id_col=id_col, seed=seed
-    )
-    spark = emb.sparkSession
-    cent = spark.createDataFrame(centers, "ivf_cell int, center array<double>")
-    q = assigned.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    # nprobe closest centroids to the query - a top-k over n_cells rows.
-    probe_cells = top_k(
-        cent.crossJoin(F.broadcast(q)).select(
-            "ivf_cell", cosine("center", "__q").alias("__d")
-        ),
-        [F.desc("__d"), F.asc("ivf_cell")],
-        nprobe,
-    ).select("ivf_cell")
-    cand = (
-        assigned.join(F.broadcast(probe_cells), "ivf_cell")
-        .filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine(vec_col, "__q"), 6).alias("cos_sim"),
-        )
-    )
-    return top_k(cand, [F.desc("cos_sim"), F.asc("vec_id")], k)

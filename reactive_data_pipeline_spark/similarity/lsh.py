@@ -1,70 +1,51 @@
-"""Random-hyperplane LSH for approximate nearest-neighbor search.
+"""Sign-LSH approximate nearest-neighbor search, validated against the
+exact top-k in the same pass.
 
-Signatures: sign of <v, p_i> for ``num_planes`` fixed pseudo-random
-hyperplanes (deterministic seed), packed into an integer bucket id. The
-collision probability of two vectors is (1 - theta/pi)^num_planes, so
-bucket-mates are cosine-close with high probability.
+Buckets are the near-dup pipeline's keys (``dedup.embedding.sign_keys``)
+with one band of ``num_planes`` md5-derived integer hyperplanes: bit i
+is set iff the quantized vector's integer dot with plane i is positive.
+The collision probability of two vectors is about (1 - theta/pi)^bits,
+so bucket-mates are cosine-close with high probability. A query probes
+its own bucket plus every bucket within ``probe_radius`` bit flips
+(multi-probe LSH).
 
-Scale shape: bucketing is a narrow map (no shuffle); the query probes
-its own bucket plus all buckets at Hamming distance <= ``probe_radius``
-(multi-probe LSH), turning the search into an equi join on the bucket id
-over a small fraction of the table. Repartitioning/bucketing the stored
-table by ``lsh_bucket`` makes the probe a partition-pruned scan.
-
-Approximate by construction -> rows-only driver check (no SQL oracle);
-the exact baseline is similarity.brute.knn_brute.
+The keys are exact integer arithmetic on any vector dimension (the
+planes are built for the corpus's own dimension), so the DuckDB oracle
+recomputes every bucket, and with them the approximate top-k, row for
+row (``queries.llm.knn_lsh_cosine``).
 """
 
 from __future__ import annotations
 
-from itertools import combinations
+from functools import partial
 
-import numpy as np
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine
+from ..dedup.embedding import md5_planes, sign_keys
 from ..operators.relational import top_k
-
-DEFAULT_SEED = 42
-
-
-def hyperplanes(dim: int, num_planes: int = 8, seed: int = DEFAULT_SEED) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (public numpy RNG)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(num_planes, dim))
-    planes /= np.linalg.norm(planes, axis=1, keepdims=True)
-    return [[float(x) for x in p] for p in planes]
+from .dense import _block, cosines
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
-    """Packed sign-bit bucket id as a JVM expression over literal planes."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _scored(batches, q, lq, q_bucket, planes, probe_radius, id_col, vec_col):
+    """Per Arrow batch: each row's exact cosine to the query ``q`` (NaN
+    where ``functions.vectors.cosine`` is NULL) and whether its bucket is
+    within ``probe_radius`` bit flips of ``q_bucket``. No query row: no
+    output."""
+    if not len(q):
+        return
+    bits = len(planes)  # one band
+    for pdf in batches:
+        A, la = _block(pdf[vec_col].to_numpy(), q.shape[1])
+        flips = sign_keys(A, planes, bits)[:, 0] ^ q_bucket[0]
+        yield pd.DataFrame(
+            {
+                "vec_id": pdf[id_col].to_numpy(),
+                "cos": cosines(A, la, q, lq)[:, 0],
+                "hit": sum((flips >> b) & 1 for b in range(bits)) <= probe_radius,
+            }
         )
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
-def with_lsh_bucket(
-    emb: DataFrame, num_planes: int = 8, vec_col: str = "embedding", seed: int = DEFAULT_SEED
-) -> DataFrame:
-    dim = 64  # driver embeddings table; callers with other dims pass planes via _bucket_expr
-    planes = hyperplanes(dim, num_planes, seed)
-    return emb.withColumn("lsh_bucket", _bucket_expr(vec_col, planes))
-
-
-def probe_masks(num_planes: int, probe_radius: int) -> list[int]:
-    """Multi-probe neighborhood: all XOR masks with <= radius bits set."""
-    masks = [0]
-    for r in range(1, probe_radius + 1):
-        masks += [sum(1 << i for i in c) for c in combinations(range(num_planes), r)]
-    return masks
 
 
 def knn_lsh_and_brute(
@@ -75,72 +56,52 @@ def knn_lsh_and_brute(
     probe_radius: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
 ) -> tuple[DataFrame, DataFrame]:
-    """(approx, exact) top-k in ONE scan (optimization round 13, guide
-    section 2.4 - the round-12 verdict's item 6): the LSH-validation
-    workload runs the approximate top-k AND its brute-force yardstick
-    over the same table, which as two independent plans scans (and
-    scores) the corpus twice. Here one pass computes per row the exact
-    cosine (what brute needs anyway) plus the multi-probe bucket-match
-    flag; the narrow (id, cos, flag) relation is checkpointed once and
-    both top-ks are TakeOrdered reads of it. Each leg is row-identical
-    to knn_lsh / knn_brute by construction: same cosine expression,
-    same probe predicate, same total order (pinned by
-    test_knn_fused_matches_separate_legs)."""
-    bucketed = with_lsh_bucket(emb, num_planes=num_planes, vec_col=vec_col, seed=seed)
-    q = bucketed.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q"), F.col("lsh_bucket").alias("__qb")
+    """(approx, exact) top-k cosine neighbors of ``query_id`` (excluded
+    from both), each (vec_id, cos_sim rounded to 6 dp) in the total order
+    cos_sim desc, vec_id asc. ``approx`` ranks only the rows whose bucket
+    is within ``probe_radius`` bit flips of the query's; ``exact`` ranks
+    every row (the brute-force yardstick).
+
+    The query row is collected once at build time and its bucket computed
+    on the driver by the same ``sign_keys``. One ``mapInPandas`` pass then
+    emits (vec_id, cos, hit) per row, with ``cos`` from the dense kernel's
+    fold (bit-identical to ``functions.vectors.cosine``, so ``exact``
+    equals ``knn_brute``); the narrow relation is checkpointed once and
+    both top-ks are TakeOrdered reads of it."""
+    vecs = (
+        emb.filter(F.col(id_col) == query_id)
+        .select(F.col(vec_col).cast("array<double>"))
+        .limit(1)
+        .toPandas()
+        .iloc[:, 0]
+        .to_numpy()
     )
-    probe = F.array(*[F.lit(m).cast("long") for m in probe_masks(num_planes, probe_radius)])
+    dim = len(vecs[0]) if len(vecs) and vecs[0] is not None else 0
+    q, lq = _block(vecs, dim)
+    planes = md5_planes(1, num_planes, dim)
+    q_bucket = sign_keys(q, planes, num_planes)[:, 0]
+    id_type = emb.schema[id_col].dataType.simpleString()
     scored = (
-        bucketed.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine(vec_col, "__q"), 6).alias("cos_sim"),
-            F.array_contains(
-                probe, F.col("lsh_bucket").bitwiseXOR(F.col("__qb"))
-            ).alias("__lsh_hit"),
+        emb.filter(F.col(id_col) != query_id)
+        .select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+        .mapInPandas(
+            partial(
+                _scored,
+                q=q,
+                lq=lq,
+                q_bucket=q_bucket,
+                planes=planes,
+                probe_radius=probe_radius,
+                id_col=id_col,
+                vec_col=vec_col,
+            ),
+            f"vec_id {id_type}, cos double, hit boolean",
         )
+        .select("vec_id", F.round("cos", 6).alias("cos_sim"), "hit")
         .localCheckpoint(eager=True)
     )
     order = [F.desc("cos_sim"), F.asc("vec_id")]
-    approx = top_k(scored.filter("__lsh_hit").drop("__lsh_hit"), order, k)
-    exact = top_k(scored.drop("__lsh_hit"), order, k)
+    approx = top_k(scored.filter("hit").drop("hit"), order, k)
+    exact = top_k(scored.drop("hit"), order, k)
     return approx, exact
-
-
-def knn_lsh(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    num_planes: int = 8,
-    probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose bucket is within
-    ``probe_radius`` bit flips of the query's bucket.
-
-    Columns: vec_id, cos_sim (same schema as knn_brute).
-    """
-    bucketed = with_lsh_bucket(emb, num_planes=num_planes, vec_col=vec_col, seed=seed)
-    q = bucketed.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q"), F.col("lsh_bucket").alias("__qb")
-    )
-    # Multi-probe neighborhood: all masks with <= probe_radius bits set.
-    probe = F.array(*[F.lit(m).cast("long") for m in probe_masks(num_planes, probe_radius)])
-    cand = (
-        bucketed.filter(F.col(id_col) != query_id)
-        .join(
-            F.broadcast(q),
-            F.array_contains(probe, F.col("lsh_bucket").bitwiseXOR(F.col("__qb"))),
-        )
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine(vec_col, "__q"), 6).alias("cos_sim"),
-        )
-    )
-    return top_k(cand, [F.desc("cos_sim"), F.asc("vec_id")], k)

@@ -17,8 +17,7 @@ that the SPARK plans survive the volume.
 Skips (by design, each a check-scale-only construction):
 
 * the brute-force/recall-contract legs - their ground-truth side is
-  O(N^2) on purpose (`*_recall_contract`, `embedding_neardup_pairs`,
-  `ann_recall_contract`);
+  O(N^2) on purpose (`*_recall_contract`, `embedding_neardup_pairs`);
 * `semdedup_cluster_pairs` - O(N^2/k) with k fixed at the check-scale
   value; deployments scale k ~ N (see similarity/centroid.py).
 
@@ -52,7 +51,6 @@ from reactive_data_pipeline_spark.queries import QUERIES  # noqa: E402
 #: check-scale-only constructions (quadratic by design), with reasons.
 SKIP: dict[str, str] = {
     "embedding_neardup_pairs": "exact all-pairs ground truth (O(N^2) by design)",
-    "ann_recall_contract": "brute-force exact-top-k ground-truth leg",
     "minhash_recall_contract": "exact all-pairs Jaccard ground-truth leg",
     "simhash_recall_contract": "exact all-pairs hamming ground-truth leg",
     "embedding_recall_contract": "exact all-pairs cosine ground-truth leg",
